@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Interleaved same-JVM A/B of a system-property toggle (the r18
-  * optimization hooks: graft.parallelFacts, graft.approxBoundaries,
-  * ...): each rep times every named query with the property "1" then
-  * "0" back-to-back, so a host throttle window hits both sides of the
-  * comparison equally — the only honest protocol on this machine
+/** Interleaved same-JVM A/B of a system-property toggle (the
+  * [[Toggles]] registry) or a Spark SQL conf: each rep times every
+  * named query with the property "1" then "0" back-to-back, so a host
+  * throttle window hits both sides of the comparison equally — the only honest protocol on this machine
   * (BENCH_AB_r* precedent; quiet-band mem_bw 42-57 GB/s has been seen
   * to collapse to 3.5 mid-session).
   *

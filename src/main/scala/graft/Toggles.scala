@@ -1,33 +1,23 @@
 package graft
 
-/** THE registry of optimization A/B toggles (r19, VERDICT r18 #9: the
-  * per-site `System.getProperty` hooks were accumulating one dual path
-  * per optimization with no single place to see them).
+/** THE registry of optimization A/B toggles.
   *
   * Every toggle is a JVM system property read through [[on]]: the
   * OPTIMIZED path is the default; setting `-Dgraft.<name>=0` restores
-  * the pre-optimization formulation. The off-paths are NOT dead code:
-  * they are the measurement baseline for `graft.AbProbe` (interleaved
-  * same-JVM A/B — the only honest timing protocol on this throttling
-  * host) and the equivalence baseline for `graft.EquivProbe` (bit-exact
-  * old-vs-new row comparison), and the judge audits optimization claims
-  * by flipping them. They are exercised by specs via the probes and the
-  * equivalence suites; new toggles MUST be listed here.
+  * the pre-optimization formulation. An off-path is the measurement
+  * baseline for `graft.AbProbe` (interleaved same-JVM A/B) and the
+  * equivalence baseline for `graft.EquivProbe` (bit-exact old-vs-new
+  * row comparison) while its decision is still open; new toggles MUST
+  * be listed here.
+  *
+  * Once a toggle's decision is settled, its off-path is deleted
+  * together with the toggle. A retired path is checked against the
+  * commit before its deletion instead: run `graft.Verify` on both
+  * trees and compare the dumps with `tools/compare_dumps.py`.
   *
   * | property | guards | decided | evidence |
   * |---|---|---|---|
-  * | graft.parallelFacts   | Q.th scan repartition before decimal moment aggs | r18 | A/B 1.3-2.1x on moment lanes, losing elsewhere (Q.t note) |
-  * | graft.lanePersist     | Q.p multi-consumer persists (jaccard block) | r18 | A/B 2.68x q_jaccard_block; negative on LSH/simhash/dsir/bigram/bm25 |
-  * | graft.fastPercentile  | q_percentile counts+cumulative-window form | r18 | A/B 2.0x, bit-identical to builtin percentile at 3 SFs |
-  * | graft.tfidfWin        | tfidf per-token df via window (1 tok exchange) | r18 | A/B 1.19x |
-  * | graft.tfidfMap        | tfidf per-doc weight-map dot product | r18 | A/B 1.09x |
-  * | graft.tfidfAux        | tfidf metadata nDocs count + docAgg persist | r18 | A/B 1.09x |
-  * | graft.rollMulti       | fused rollingAggMulti (1 staged pass for N aggs) | r18 | A/B 1.30x q_rolling_block |
-  * | graft.rollKernel      | WindowQuantileItems codegen kernel (median/quantile) | r18 | A/B 2.76x quantile, 1.47x median |
-  * | graft.tfidfDotKernel  | tfidf per-pair dot via codegen kernel (TfidfMapDot) instead of 3 HOFs/row | r19 | A/B 1.31x, see OPTIMIZATION_r19.md |
-  * | graft.gpWindow        | q_percentile_grouped counts+window form (lane only; GroupedPercentile operator unchanged) | r19 | A/B 1.14x, see OPTIMIZATION_r19.md |
-  * | graft.rollBlockGen    | OrderedOps block-array generator kernel (rollingAggMulti / median / quantile) | r19 | A/B 2.10x block / 1.82x median / 2.03x quantile, see OPTIMIZATION_r19.md |
-  * | graft.zstInferPrefix  | fromZstJsonl bounded-prefix schema inference + FAILFAST read | r19 | A/B 1.30x q_jsonl_zst, see OPTIMIZATION_r19.md |
+  * | graft.zstInferPrefix  | fromZstJsonl bounded-prefix schema inference + FAILFAST read | r19 | A/B 1.30x q_jsonl_zst, see OPTIMIZATION_r19.md; fields first seen past the prefix are still dropped |
   */
 object Toggles {
   /** True unless `-D<prop>=0` — optimized path on by default. */

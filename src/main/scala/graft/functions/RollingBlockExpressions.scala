@@ -10,54 +10,44 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, TypeUtils}
 import org.apache.spark.sql.types._
 
-/** Block-array generators for the OrderedOps rolling operators (r19,
-  * VERDICT r18 #1 — "the real rolling kernel").
+/** Block-array generators for the OrderedOps rolling operators.
   *
-  * The r18 shape computed trailing-window statistics with a
-  * block-partitioned WindowExec (one sliding-frame aggregate re-run
-  * per row per statistic) plus a row-keyed boundary-carry join (one
-  * aggregated carry row per receiver row). These generators replace
-  * all of that with ONE row per BLOCK: the block's rows arrive as a
-  * collected array (`collect_list` over the `__blk` hash exchange —
-  * the same single exchange the window paid), the previous block's
-  * w−1 boundary rows arrive as a second tiny array joined on the
-  * block id (nBlocks rows, not nRows), and a flat JVM loop emits
-  * every output row with its statistics — per-block sort paid once,
-  * per-row work O(window), no WindowExec, no per-row carry join.
+  * Trailing-window statistics are computed with ONE row per BLOCK: the
+  * block's rows arrive as a collected array (`collect_list` over the
+  * `__blk` hash exchange), the previous block's w−1 boundary rows
+  * arrive as a second tiny array joined on the block id (nBlocks rows,
+  * not nRows), and a flat JVM loop emits every output row with its
+  * statistics — per-block sort paid once, per-row work O(window), no
+  * WindowExec, no per-row carry join.
   *
-  * Memory: one block's rows are materialized per task — the SAME
-  * bound as WindowExec, which buffers the whole `__blk` partition in
-  * its window group buffer (ExternalAppendOnlyUnsafeRowArray) before
-  * emitting; callers bound it via blockSize exactly as before.
+  * Memory: one block's rows are materialized per task — the same bound
+  * as a WindowExec over `__blk`, which buffers the whole partition
+  * before emitting; callers bound it via blockSize.
   *
-  * Aggregation semantics mirror the window formulation
-  * operation-for-operation:
+  * Aggregation semantics are those of Spark's sliding-frame window
+  * aggregates (`rowsBetween(-(w-1), 0)`):
   *   - sum: frame values accumulated left-to-right in window order
   *     (what SlidingWindowFunctionFrame replays); DECIMAL sums are
-  *     exact (java BigDecimal, result re-capped to the Spark sum
-  *     result type with HALF_UP like CheckOverflow — null on
-  *     overflow); integral sums widen to long; float/double sums
-  *     accumulate in double. Null inputs are skipped; an all-null
-  *     window yields null.
+  *     exact (java BigDecimal, result re-capped to the sum result type
+  *     with HALF_UP like CheckOverflow); integral sums widen to long;
+  *     float/double sums accumulate in double. Null inputs are
+  *     skipped; an all-null window yields null.
   *   - count: non-null count, never null.
   *   - min/max: Spark's interpreted ordering for the input type
-  *     (NaN greatest for floats — `least`/`greatest` parity), nulls
-  *     skipped, all-null window yields null.
+  *     (NaN greatest for floats), nulls skipped, all-null window
+  *     yields null.
   *
   * Validation (validate = true) preserves the OrderedOps dense-index
   * contract and FAILS LOUDLY on sparse/duplicated indexes, with
-  * strictly wider coverage than the window form's O(boundary)
-  * guards: every item of block b must sit at exactly
+  * per-row coverage: every item of block b must sit at exactly
   * `b·blockSize + position` (per-row contiguity — gaps, shifts and
   * duplicates all break it), and a non-first block must receive
   * exactly window−1 carried rows with exactly the indexes
   * `b·blockSize − (window−1) … b·blockSize − 1` (carry provenance —
-  * a short, gapped or duplicated predecessor tail is caught; the
-  * window form's residual "duplicate arranged to keep the block max
-  * aligned" class is detected here, closing ADVICE r18 #1 for the
-  * rolling operators). Residual undetectable case, as before:
-  * TRAILING whole blocks missing — indistinguishable from the end of
-  * the data.
+  * a short, gapped or duplicated predecessor tail is caught, including
+  * a duplicate arranged to keep the block max aligned). Residual
+  * undetectable case: TRAILING whole blocks missing — indistinguishable
+  * from the end of the data.
   */
 object RollingBlocks {
 
@@ -108,6 +98,29 @@ object RollingBlocks {
     }
   }
 
+  /** Interpolated quantile of vals[0, n) (sorted in place), boxed;
+    * null for n == 0. `midpoint = true` is SQL MEDIAN's even-n
+    * (a+b)/2 with q pinned 0.5; `false` is numpy-linear
+    * `lov + (hiv - lov) * frac` at position q·(n−1). NaN sorts last,
+    * matching Spark's NaN-greatest double ordering. */
+  def quantileOfSorted(vals: Array[Double], n: Int, q: Double,
+                       midpoint: Boolean): Any = {
+    if (n == 0) return null
+    java.util.Arrays.sort(vals, 0, n)
+    if (midpoint) {
+      val half = n / 2
+      if (n % 2 == 1) java.lang.Double.valueOf(vals(half))
+      else java.lang.Double.valueOf((vals(half - 1) + vals(half)) / 2.0)
+    } else {
+      val pos = q * (n - 1).toDouble
+      val lo = math.floor(pos).toInt
+      val frac = pos - lo.toDouble
+      val lov = vals(lo)
+      val hiv = vals(math.min(lo + 1, n - 1))
+      java.lang.Double.valueOf(lov + (hiv - lov) * frac)
+    }
+  }
+
   /** Per-spec sliding-window aggregation kernels over the virtual
     * sequence carry ++ items; `get(j)` yields the (boxed catalyst)
     * value at virtual position j or null. */
@@ -115,10 +128,9 @@ object RollingBlocks {
     def compute(get: Int => Any, lo: Int, hi: Int): Any
   }
 
-  /** Overflow mirrors the window+carry join form under the session's
-    * ANSI setting: ansi on (the Spark 4 default this engine runs
-    * with) -> SparkArithmeticException like CheckOverflow / the carry
-    * combine Add; ansi off -> null. */
+  /** Overflow follows the session's ANSI setting: ansi on (the Spark 4
+    * default this engine runs with) -> SparkArithmeticException like
+    * CheckOverflow; ansi off -> null. */
   final class SumDecimalKernel(resP: Int, resS: Int, ansi: Boolean) extends AggKernel {
     def compute(get: Int => Any, lo: Int, hi: Int): Any = {
       var acc: JBigDecimal = null
@@ -196,12 +208,11 @@ object RollingBlocks {
     }
   }
 
-  /** The join form's sum result type for an input type. For window>1
-    * (`widened`) the carry combine `coalesce(intra,0)+coalesce(extra,0)`
-    * adds two Sum results, so decimals gain ONE more digit of precision
-    * on top of Sum's bounded precision+10 (both capped at 38); at
-    * window==1 the value is the bare window Sum. Integrals -> long,
-    * float/double -> double in both shapes. */
+  /** Rolling sum result type for an input type. Decimals get Sum's
+    * bounded precision+10, plus ONE more digit for window>1
+    * (`widened`, both capped at 38) — the output type the rolling
+    * sums have always had, kept stable for readers of stored results.
+    * Integrals -> long, float/double -> double. */
   def sumResultType(dt: DataType, widened: Boolean): DataType = dt match {
     case d: DecimalType =>
       val p = math.min(d.precision + 10, 38)
@@ -274,7 +285,7 @@ abstract class RollingBlockGenerator
 }
 
 /** N trailing rolling aggregates over block arrays — the generator
-  * behind OrderedOps.rollingAggMulti (graft.rollBlockGen path).
+  * behind OrderedOps.rollingAggMulti.
   * Emits, per block row: the payload fields, then one column per
   * spec. `itemOrds`/`carryOrds` locate each spec's source field
   * inside the item / carry structs (0-based INCLUDING the leading
@@ -342,13 +353,11 @@ case class RollingBlockAgg(
 }
 
 /** Trailing rolling interpolated quantile/median over block arrays —
-  * the generator behind OrderedOps.rollingMedian/rollingQuantile
-  * (graft.rollBlockGen path). The value field (double) sits at
-  * `itemOrd`/`carryOrd` in the respective structs; per row the
-  * kernel gathers the window's non-null values into a scratch array,
-  * sorts, and interpolates with EXACTLY RollingKernels' formulas
-  * (midpoint = SQL MEDIAN's even-n (a+b)/2; else numpy-linear at
-  * q·(n−1)). */
+  * the generator behind OrderedOps.rollingMedian/rollingQuantile.
+  * The value field (double) sits at `itemOrd`/`carryOrd` in the
+  * respective structs; per row the kernel gathers the window's
+  * non-null values into a scratch array and applies
+  * [[RollingBlocks.quantileOfSorted]]. */
 case class RollingBlockQuantile(
     items: Expression, carry: Expression, blk: Expression,
     window: Int, blockSize: Long,
@@ -391,7 +400,7 @@ case class RollingBlockQuantile(
         }
         j += 1
       }
-      out(nF) = RollingKernels.quantileOfSorted(scratch, m, q, midpoint)
+      out(nF) = RollingBlocks.quantileOfSorted(scratch, m, q, midpoint)
       new GenericInternalRow(out)
     }
   }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Scale-safe ordered operators: shift / diff / rolling over a total
   * order WITHOUT a global single-reducer `Window.orderBy`.
@@ -19,6 +21,12 @@ import org.apache.spark.sql.expressions.Window
   *   3. fix up the first/last `p` rows of each block by joining back
   *      only the boundary rows of the neighbouring block (p rows per
   *      block).
+  *
+  * shift, rollingArray and cumsum run exactly that plan. The rolling
+  * aggregates, median and quantile run the same decomposition as a
+  * block-array generator instead (one collected row per block plus the
+  * previous block's window−1 boundary rows, see
+  * [[graft.functions.RollingBlockAgg]]).
   *
   * Carry-side join strategy: the carry has `p` (or `window-1`) rows per
   * block, so its total size is `p · nBlocks` — tiny at w=3, but ~1e10
@@ -84,15 +92,13 @@ object OrderedOps {
   private def posIn(rowIndex: String, bs: Long): Column =
     col(rowIndex) - blkOf(rowIndex, bs) * lit(bs)
 
-  /** Block-array frames for the generator kernels (r19,
-    * graft.rollBlockGen): ONE row per block — `__items` collects the
-    * block's rows (leading `__i` = rowIndex as long, `rowIndex`
-    * first among the payload fields to mirror the join-form output
-    * order), `__carry` collects the previous block's window−1
-    * boundary rows (value columns only), joined on the block id
-    * (nBlocks carry rows total, vs one aggregated carry row per
-    * RECEIVER row in the join form). Boundary selection is the same
-    * arithmetic projection of the raw frame as the r18 form. */
+  /** Block-array frames for the generator kernels: ONE row per block —
+    * `__items` collects the block's rows (leading `__i` = rowIndex as
+    * long, `rowIndex` first among the payload fields), `__carry`
+    * collects the previous block's window−1 boundary rows (value
+    * columns only), joined on the block id (nBlocks carry rows total).
+    * The boundary rows are an arithmetic projection of the raw frame
+    * (rowIndex % bs), like [[shift]]'s carries. */
   private def blockGenFrames(df: DataFrame, rowIndex: String, bs: Long,
                              window: Int, carryCols: Seq[String]): DataFrame = {
     val payload = rowIndex +: df.columns.filterNot(_ == rowIndex).toSeq
@@ -121,13 +127,10 @@ object OrderedOps {
   }
 
   /** Payload field order + schema fed to the generators (rowIndex
-    * first — the join form's USING join hoists it first, so the
-    * generator path keeps the identical output column order). */
-  private def payloadSchema(df: DataFrame, rowIndex: String)
-      : (Seq[String], org.apache.spark.sql.types.StructType) = {
+    * first, then the other input columns in order). */
+  private def payloadSchema(df: DataFrame, rowIndex: String): (Seq[String], StructType) = {
     val payload = rowIndex +: df.columns.filterNot(_ == rowIndex).toSeq
-    (payload, org.apache.spark.sql.types.StructType(
-      payload.map(c => df.schema(df.schema.fieldIndex(c)))))
+    (payload, StructType(payload.map(c => df.schema(df.schema.fieldIndex(c)))))
   }
 
   private def staged(df: DataFrame, rowIndex: String, blockSize: Long): DataFrame = {
@@ -185,8 +188,10 @@ object OrderedOps {
     //   lag : last p rows of block b feed rows __rn = p-__rnd+1 of b+1
     //   lead: first p rows of block b feed rows __rnd = p-__rn+1 of b-1
     // The carry branch is an arithmetic projection of the RAW frame
-    // (rowIndex % bs), not a filter over the staged windows — same
-    // rationale and dense-index equivalence as [[rollingAggMulti]];
+    // (rowIndex % bs), not a filter over the staged windows, so only
+    // the main branch pays the block-window chain and the boundary
+    // filter pushes into the scan. On a dense index the selected rows
+    // are identical (pos-from-end bs - idx%bs == __rnd on full blocks);
     // sparse indexes still fail the receiver-side provenance guard
     // (__cidx must equal rowIndex -/+ p exactly).
     val pos = posIn(rowIndex, bs); val blk = blkOf(rowIndex, bs)
@@ -297,11 +302,7 @@ object OrderedOps {
     * decomposable aggregates sum/count/mean/min/max). Partial windows
     * at the global head match rowsBetween(-(w-1), 0) edge behavior.
     *
-    * Same block decomposition as [[shift]]: the intra-block window
-    * covers rows >= `window` into a block; the first window-1 rows of
-    * each block combine their intra result with the carried tail of the
-    * previous block (every aggregate here is decomposable: the combine
-    * is +, least or greatest). */
+    * One-spec [[rollingAggMulti]]. */
   def rollingAgg(df: DataFrame, column: String, window: Int, as: String, how: String,
                  rowIndex: String = "row_index",
                  blockSize: Long = DefaultBlockSize,
@@ -312,17 +313,12 @@ object OrderedOps {
   /** One rolling aggregate request for [[rollingAggMulti]]. */
   final case class RollSpec(column: String, how: String, as: String)
 
-  /** N trailing rolling aggregates in ONE staged pass (r18 opt
-    * session 2): stacked [[rollingAgg]] calls each re-run the block
-    * staging windows AND a carry join over the whole prior result, so
-    * a 3-statistic request (rolling variance: Σx, Σx², n) paid the
-    * machinery three times. All requested aggregates share one staged
-    * frame, one carry frame (all source columns ride it), one
-    * receiver-side aggregation and one join — per-aggregate values are
-    * unchanged because each depends only on (its column, the window
-    * frame), not on the other aggregates. Guard structure identical
-    * to the single-aggregate form (it only reads positions/carry
-    * provenance, shared across specs). */
+  /** N trailing rolling aggregates (sum/count/min/max) in ONE pass of
+    * the block-array generator ([[graft.functions.RollingBlockAgg]]):
+    * every statistic is computed in one flat loop over the block's
+    * rows plus the previous block's window−1 carried rows. An output
+    * name that is already an input column replaces that column in
+    * place (withColumn semantics). */
   def rollingAggMulti(df: DataFrame, specs: Seq[RollSpec], window: Int,
                       rowIndex: String = "row_index",
                       blockSize: Long = DefaultBlockSize,
@@ -331,114 +327,42 @@ object OrderedOps {
     require(specs.nonEmpty, "rollingAggMulti: no specs")
     require(specs.map(_.as).distinct.size == specs.size,
       "rollingAggMulti: duplicate output names")
+    specs.find(s => !RollHows(s.how)).foreach(s =>
+      throw new IllegalArgumentException(s"unknown rolling agg: ${s.how}"))
     val bs = effectiveBlockSize(blockSize, window - 1)
     require(bs >= window, s"blockSize=$bs must be >= window=$window")
-    def fns(how: String): (Column => Column, (Column, Column) => Column) = how match {
-      case "sum" => (sum(_), (a, b) => when(a.isNull && b.isNull, lit(null))
-        .otherwise(coalesce(a, lit(0)) + coalesce(b, lit(0))))
-      case "count" => (c => count(c), (a, b) => coalesce(a, lit(0L)) + coalesce(b, lit(0L)))
-      case "min" => (min(_), (a, b) => least(a, b)) // least skips nulls
-      case "max" => (max(_), (a, b) => greatest(a, b))
-      case other => throw new IllegalArgumentException(s"unknown rolling agg: $other")
-    }
-    // r19 (graft.rollBlockGen): block-array generator kernel — one
-    // collected row per block + one tiny carry array per block, all
-    // statistics in a flat JVM loop (see RollingBlockExpressions).
-    // Falls back to the window form when an output name collides with
-    // an input column (withColumn-replace semantics the generator
-    // does not reproduce). graft.rollBlockGen=0 = the r18 window+carry
-    // join form (AbProbe/EquivProbe hook).
-    val collision = specs.exists(s => df.columns.contains(s.as))
-    if (graft.Toggles.on("graft.rollBlockGen") && !collision) {
-      specs.foreach(s => fns(s.how)) // validate `how` names up front
-      val carryCols = specs.map(_.column).distinct
-      val (payload, pSchema) = payloadSchema(df, rowIndex)
-      val joined = blockGenFrames(df, rowIndex, bs, window, carryCols)
-      val carrySchema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("__i",
-          org.apache.spark.sql.types.LongType, nullable = false) +:
-          carryCols.map(c => df.schema(df.schema.fieldIndex(c))))
-      import org.apache.spark.sql.graftbridge.Bridge
-      val gen = graft.functions.RollingBlockAgg(
-        Bridge.expression(col("__items")), Bridge.expression(col("__carry")),
-        Bridge.expression(col("__blk")), window, bs,
-        specs.map(_.how), specs.map(s => 1 + payload.indexOf(s.column)),
-        specs.map(s => 1 + carryCols.indexOf(s.column)),
-        specs.map(_.as), pSchema, carrySchema, validate,
-        ansi = df.sparkSession.conf.get("spark.sql.ansi.enabled", "true").toBoolean)
-      return joined.select(Bridge.column(gen))
-    }
-    val fx = specs.map(s => fns(s.how))
-    val asc = Window.partitionBy(col("__blk")).orderBy(col(rowIndex).asc)
-    val frame = asc.rowsBetween(-(window - 1), 0)
-    val st = specs.zipWithIndex.foldLeft(staged(df, rowIndex, bs)) {
-      case (d, (s, i)) => d.withColumn(s"__intra$i", fx(i)._1(col(s.column)).over(frame))
-    }
-    if (window == 1) {
-      val base = if (!validate) lit(true)
-      else when(col("__rnd") > 1, lit(true))
-        .otherwise(when(lastRowAligned(rowIndex, bs), lit(true))
-          .otherwise(reindexError("rolling").isNotNull))
-      val res = specs.zipWithIndex.foldLeft(st) { case (d, (s, i)) =>
-        d.withColumn(s.as,
-          if (!validate) col(s"__intra$i") else when(base, col(s"__intra$i")))
-      }
-      return res.drop("__blk" +: "__rn" +: "__rnd" +:
-        specs.indices.map(i => s"__intra$i"): _*)
-    }
-    // row j (j < window) of block b+1 still needs the last (window - j)
-    // rows of block b: carry those boundary rows (every requested source
-    // column on one row), aggregate per receiver.
-    //
-    // r18 opt session 2: both boundary branches are ARITHMETIC
-    // projections of the RAW frame (rowIndex % bs), not filters over
-    // the staged windows — selecting ~2(window-1) rows per block used
-    // to re-run the whole block-window chain per branch; now only the
-    // main branch pays it and the boundary filters push into the scan.
-    // On a dense index the selected rows are identical (pos-from-end
-    // bs - idx%bs == __rnd on full blocks; a short LAST block has no
-    // receiver, so its tail legitimately sends nothing). On a sparse /
-    // duplicated index the main branch's guards still fail the query
-    // loudly: carry provenance (__cn/__cmin) is checked against the
-    // absolute indexes actually received, and every block's last row
-    // re-derives contiguity — any materialization evaluates those rows.
     val carryCols = specs.map(_.column).distinct
-    val pos = posIn(rowIndex, bs)
-    val carries = df.where(pos >= lit(bs) - (window - 1))
-      .select(Seq((blkOf(rowIndex, bs) + 1L).as("__blk"),
-        (lit(bs) - pos).cast("int").as("__k"),
-        col(rowIndex).as("__cidx")) ++
-        carryCols.map(c => col(c).as(s"__carry_$c")): _*)
-    val extraAggs = specs.zipWithIndex.map { case (s, i) =>
-      fx(i)._1(col(s"__carry_${s.column}")).as(s"__extra$i")
-    } ++ Seq(count(lit(1)).as("__cn"), min(col("__cidx")).as("__cmin"))
-    val extra = df.where(pos <= window - 2)
-      .select(blkOf(rowIndex, bs).as("__blk"),
-        (pos + 1).cast("int").as("__rn"), col(rowIndex))
-      .join(hinted(carries, window - 1), Seq("__blk"), "left")
-      .where(col("__k") <= lit(window) - col("__rn"))
-      .groupBy(col(rowIndex)).agg(extraAggs.head, extraAggs.tail: _*)
-    val joined = st.join(hinted(extra, window - 1), Seq(rowIndex), "left")
-    def guardedOf(value: Column): Column = if (!validate) value else {
-      // O(boundary) guard (same scheme as shift's): interior rows pay
-      // two integer comparisons; the first window-1 rows of a
-      // non-first block check they received exactly the contiguous
-      // index range [rowIndex-window+1, blockStart-1] (count + min pin
-      // it), and the block's last row re-derives block contiguity
-      val carryOk = col("__blk") === 0L ||
-        (coalesce(col("__cn"), lit(0L)) === lit(window).cast("long") - col("__rn") &&
-          col("__cmin") === col(rowIndex) - (window - 1))
-      val ok = (col("__rn") > window - 1 || carryOk) &&
-        (col("__rnd") > 1 || lastRowAligned(rowIndex, bs))
-      when(col("__rn") > window - 1 && col("__rnd") > 1, value)
-        .otherwise(when(ok, value).otherwise(reindexError("rolling")))
-    }
-    val res = specs.zipWithIndex.foldLeft(joined) { case (d, (s, i)) =>
-      d.withColumn(s.as, guardedOf(fx(i)._2(col(s"__intra$i"), col(s"__extra$i"))))
-    }
-    res.drop("__blk" +: "__rn" +: "__rnd" +: "__cn" +: "__cmin" +:
-      (specs.indices.map(i => s"__intra$i") ++
-        specs.indices.map(i => s"__extra$i")): _*)
+    val (payload, pSchema) = payloadSchema(df, rowIndex)
+    val (genNames, replace) = replacingOutputs(df.columns.toSeq, specs.map(_.as))
+    val joined = blockGenFrames(df, rowIndex, bs, window, carryCols)
+    val carrySchema = StructType(StructField("__i", LongType, nullable = false) +:
+      carryCols.map(c => df.schema(df.schema.fieldIndex(c))))
+    val gen = graft.functions.RollingBlockAgg(
+      Bridge.expression(col("__items")), Bridge.expression(col("__carry")),
+      Bridge.expression(col("__blk")), window, bs,
+      specs.map(_.how), specs.map(s => 1 + payload.indexOf(s.column)),
+      specs.map(s => 1 + carryCols.indexOf(s.column)),
+      genNames, pSchema, carrySchema, validate,
+      ansi = df.sparkSession.conf.get("spark.sql.ansi.enabled", "true").toBoolean)
+    replace(joined.select(Bridge.column(gen)))
+  }
+
+  private val RollHows = Set("sum", "count", "min", "max")
+
+  /** withColumn-replace semantics for the generators: an output name
+    * that is already an input column is generated under a temporary
+    * name, then selected back in the input's column order with the
+    * output in the replaced column's position (other outputs follow).
+    * Returns the names to generate and the projection to apply to the
+    * generator output. */
+  private def replacingOutputs(input: Seq[String], outs: Seq[String])
+      : (Seq[String], DataFrame => DataFrame) = {
+    val clash = outs.filter(input.contains).toSet
+    if (clash.isEmpty) return (outs, identity)
+    def tmp(o: String): String = if (clash(o)) s"__rollout_$o" else o
+    (outs.map(tmp), g => g.select(
+      input.map(c => if (clash(c)) col(tmp(c)).as(c) else col(c)) ++
+        outs.filterNot(clash).map(col): _*))
   }
 
   def rollingSum(df: DataFrame, column: String, window: Int, as: String,
@@ -490,7 +414,7 @@ object OrderedOps {
     * accessor (core/rolling.py:4-31: `edge="right"` exposes, for each
     * row, the raw window [i−window+1, i] as a fixed-length vector with
     * `fill_value` in the out-of-range head slots; here fill_value is
-    * null). Same block decomposition as [[rollingAgg]], but the
+    * null). Same block decomposition as [[shift]], but the
     * carried/intra values ride inside (index, value) structs: structs
     * are never null, so null VALUES survive `collect_list` (which
     * drops bare null elements), and the index field makes the window
@@ -501,8 +425,7 @@ object OrderedOps {
                    blockSize: Long = DefaultBlockSize,
                    validate: Boolean = true,
                    fillValue: Option[Any] = None,
-                   edge: String = "right",
-                   rawItems: Boolean = false): DataFrame = {
+                   edge: String = "right"): DataFrame = {
     require(window >= 1, "window must be >= 1")
     require(edge == "right" || edge == "left",
       s"""edge must be "right" or "left", not "$edge"""")
@@ -518,12 +441,7 @@ object OrderedOps {
       else asc.rowsBetween(0, window - 1)
     val st = staged(df, rowIndex, bs).withColumn("__intra",
       collect_list(item).over(frame))
-    // rawItems (r18 opt session 2): order-insensitive consumers
-    // (rollingMedian / rollingQuantile sort values anyway) take the
-    // merged (i, v) struct array as-is — the per-row interpreted HOF
-    // chain here (sort_array over structs + transform + array_repeat +
-    // concat; HOFs don't whole-stage-codegen) was most of their cost.
-    def finish(merged: Column): Column = if (rawItems) merged else {
+    def finish(merged: Column): Column = {
       val values = transform(sort_array(merged), e => e.getField("v"))
       // fixed length `window`: pad the partial windows at the global
       // head (edge right) / tail (edge left) with fill_value slots
@@ -543,7 +461,7 @@ object OrderedOps {
     // window−1 rows of block b complete the last rows of b−1.
     // Both boundary branches are arithmetic projections of the RAW
     // frame (same rationale and dense-index equivalence argument as
-    // [[rollingAggMulti]]; a short LAST block has no successor, so its
+    // [[shift]]; a short LAST block has no successor, so its
     // tail neither sends (right) nor receives (left) — matching the
     // window-based selection on a dense index, and sparse indexes
     // still fail the main branch's contiguity/provenance guards).
@@ -574,7 +492,7 @@ object OrderedOps {
     val value = finish(when(col("__cext").isNotNull,
       concat(col("__cext"), col("__intra"))).otherwise(col("__intra")))
     val guarded = if (!validate) value else {
-      // same O(boundary) guard as rollingAgg, mirrored by direction.
+      // same O(boundary) guard scheme as shift's, mirrored by direction.
       // RIGHT: predecessors of a non-first block are full on a dense
       // index, so receivers demand the exact contiguous range
       // [rowIndex−window+1, blockStart−1]. LEFT: the successor block
@@ -634,44 +552,19 @@ object OrderedOps {
   /** Rolling MEDIAN over the trailing `window` rows: interpolated
     * (quantile_cont 0.5) over the window's non-null values, null for
     * an all-null window — matching DuckDB/NumPy median semantics.
-    * Median is not decomposable into carried partial aggregates, so it
-    * rides on [[rollingArray]]'s collected window (O(window) per row,
-    * sorted per row — exact, and still block-partitioned: no global
-    * window in the plan). */
+    * Median is not decomposable into carried partial aggregates, so
+    * the generator gathers and sorts each row's window (O(window) per
+    * row, exact, still block-partitioned: no global window). */
   def rollingMedian(df: DataFrame, column: String, window: Int, as: String,
                     rowIndex: String = "row_index",
                     blockSize: Long = DefaultBlockSize): DataFrame = {
     requireNumeric(df, column, "rollingMedian")
-    // r18 opt session 2: the per-row interpreted HOF chain (filter +
-    // array_sort + element_at over the finished padded array) is one
-    // codegen'd kernel over the raw merged items; formula mirrored
-    // op-for-op (RollingKernelsSpec pins old == new on hostile
-    // arrays). graft.rollKernel=0 restores the HOF form (AbProbe hook).
-    if (!graft.Toggles.on("graft.rollKernel")) {
-      val withWin = rollingArray(df, column, window, "__rwin", rowIndex, blockSize)
-      val vals = array_sort(filter(col("__rwin"),
-        v => v.isNotNull)).cast("array<double>")
-      val n = size(vals)
-      val half = (n.cast("double") / 2.0).cast("int") // floor(n/2)
-      val med = when(n === 0, lit(null).cast("double"))
-        .when(n % 2 === 1, element_at(vals, half + 1))
-        .otherwise((element_at(vals, half) + element_at(vals, half + 1)) / 2.0)
-      withWin.withColumn(as, med).drop("__rwin")
-    } else rollingOrderStat(df, column, window, as, 0.5, midpoint = true,
+    rollingOrderStat(df, column, window, as, 0.5, midpoint = true,
       rowIndex, blockSize)
   }
 
-  /** Shared kernel path for rollingMedian / rollingQuantile: raw
-    * merged window items -> one codegen'd sort+interpolate call. The
-    * value column is cast to double BEFORE windowing (the HOF forms
-    * cast the collected array after sorting — identical for numeric
-    * types: widening is monotone, nulls preserved). */
-  /** r19 (ADVICE r18 #3): the kernel paths cast the value column to
-    * double BEFORE gathering while the graft.rollKernel=0 HOF fallback
-    * sorts in the SOURCE type and casts after — identical for numeric
-    * types (widening is monotone) but divergent for e.g. strings
-    * (lexicographic vs numeric order). Order statistics over
-    * non-numeric columns are ill-defined here; fail fast. */
+  /** Order statistics over non-numeric columns are ill-defined here
+    * (the value column is cast to double before gathering); fail fast. */
   private def requireNumeric(df: DataFrame, column: String, op: String): Unit =
     df.schema(column).dataType match {
       case _: org.apache.spark.sql.types.NumericType |
@@ -680,37 +573,26 @@ object OrderedOps {
         s"OrderedOps.$op: numeric column required, got ${dt.catalogString} for '$column'")
     }
 
+  /** Shared generator path for rollingMedian / rollingQuantile
+    * ([[graft.functions.RollingBlockQuantile]]): gather + sort +
+    * interpolate per row in one flat loop over the block array. */
   private def rollingOrderStat(df: DataFrame, column: String, window: Int,
                                as: String, q: Double, midpoint: Boolean,
                                rowIndex: String, blockSize: Long): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val dfd = df.withColumn("__rq_x", col(column).cast("double"))
-    // r19 (graft.rollBlockGen): block-array generator — gather + sort +
-    // interpolate per row in one flat loop over the block array, no
-    // rollingArray staging windows / per-row collect_list / carry
-    // join. Same interpolation code (RollingKernels.quantileOfSorted).
     val bs = effectiveBlockSize(blockSize, window - 1)
     require(bs >= window, s"blockSize=$bs must be >= window=$window")
-    if (graft.Toggles.on("graft.rollBlockGen") && !df.columns.contains(as)) {
-      val (payload, pSchema) = payloadSchema(dfd, rowIndex)
-      val joined = blockGenFrames(dfd, rowIndex, bs, window, Seq("__rq_x"))
-      val carrySchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__i",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__rq_x",
-          org.apache.spark.sql.types.DoubleType)))
-      val gen = graft.functions.RollingBlockQuantile(
-        Bridge.expression(col("__items")), Bridge.expression(col("__carry")),
-        Bridge.expression(col("__blk")), window, bs, q, midpoint,
-        1 + payload.indexOf("__rq_x"), 1, as, pSchema, carrySchema,
-        validate = true)
-      return joined.select(Bridge.column(gen)).drop("__rq_x")
-    }
-    rollingArray(dfd, "__rq_x", window, "__rwin", rowIndex, blockSize,
-        rawItems = true)
-      .withColumn(as, Bridge.column(graft.functions.WindowQuantileItems(
-        Bridge.expression(col("__rwin")), q, midpoint)))
-      .drop("__rwin", "__rq_x")
+    val dfd = df.withColumn("__rq_x", col(column).cast("double"))
+    val (payload, pSchema) = payloadSchema(dfd, rowIndex)
+    val (Seq(genName), replace) = replacingOutputs(df.columns.toSeq, Seq(as))
+    val joined = blockGenFrames(dfd, rowIndex, bs, window, Seq("__rq_x"))
+    val carrySchema = StructType(Seq(StructField("__i", LongType, nullable = false),
+      StructField("__rq_x", DoubleType)))
+    val gen = graft.functions.RollingBlockQuantile(
+      Bridge.expression(col("__items")), Bridge.expression(col("__carry")),
+      Bridge.expression(col("__blk")), window, bs, q, midpoint,
+      1 + payload.indexOf("__rq_x"), 1, genName, pSchema, carrySchema,
+      validate = true)
+    replace(joined.select(Bridge.column(gen))).drop("__rq_x")
   }
 
   /** Trailing rolling exact quantile with linear interpolation (numpy
@@ -718,28 +600,13 @@ object OrderedOps {
     * the sorted non-null window values, interpolated between the two
     * bracketing elements. Generalizes [[rollingMedian]] (which keeps
     * the (a+b)/2 midpoint formula for bit-parity with SQL MEDIAN).
-    * Same block-partitioned rollingArray carry — O(window·log window)
-    * per row, no global window. */
+    * O(window·log window) per row, no global window. */
   def rollingQuantile(df: DataFrame, column: String, window: Int, q: Double,
                       as: String, rowIndex: String = "row_index",
                       blockSize: Long = DefaultBlockSize): DataFrame = {
     require(q >= 0.0 && q <= 1.0, s"quantile out of range: $q")
     requireNumeric(df, column, "rollingQuantile")
-    // kernel path + HOF fallback: see [[rollingMedian]]
-    if (!graft.Toggles.on("graft.rollKernel")) {
-      val withWin = rollingArray(df, column, window, "__rwin", rowIndex, blockSize)
-      val vals = array_sort(filter(col("__rwin"),
-        v => v.isNotNull)).cast("array<double>")
-      val n = size(vals)
-      val pos = lit(q) * (n - 1).cast("double")
-      val lo = floor(pos).cast("int")
-      val frac = pos - lo.cast("double")
-      val lov = element_at(vals, lo + 1)
-      val hiv = element_at(vals, least(lo + 2, n))
-      val out = when(n === 0, lit(null).cast("double"))
-        .otherwise(lov + (hiv - lov) * frac)
-      withWin.withColumn(as, out).drop("__rwin")
-    } else rollingOrderStat(df, column, window, as, q, midpoint = false,
+    rollingOrderStat(df, column, window, as, q, midpoint = false,
       rowIndex, blockSize)
   }
 }

@@ -598,143 +598,67 @@ object CurateQueries {
       // 1 and 8 corpus passes.
       val tok = docs2.select(col("doc_id"), explode(split(col("text2"), " ")).as("tok"))
         .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-      // count the RAW parquet (identical row count — docs2 is a pure
-      // projection) instead of re-scanning through docs2's heavy-table
-      // repartition + concat just to count rows (r18 opt session 2)
-      val aux = graft.Toggles.on("graft.tfidfAux")
-      // r19 NEGATIVE (VERDICT r18 #3 tried and reverted, A/B min-of-8
-      // interleaved): (a) hinting broadcast(docAgg) on both pair sides
-      // measured 0.99x — AQE already broadcast-converts those joins at
-      // runtime (the static plan's two-sided shuffle the r18 judge saw
-      // never executes); (b) collecting nDocs driver-side (metadata
-      // count) and riding it as a literal instead of the
-      // crossJoin(broadcast(1-row frame)) measured 0.93-0.95x — the
-      // extra driver job costs more than the four tiny 1-row
-      // BroadcastNestedLoopJoin builds it removed. Both reverted; the
-      // lane keeps the 1-row-frame nDocs and unhinted pair joins.
-      val nDocs =
-        if (aux) rawCount(s, dir, "documents", "__n")
-        else docs2.agg(count(lit(1)).as("__n"))
-      // r18 opt 2: df as count(*) OVER (PARTITION BY tok) instead of a
-      // separate groupBy(tok) aggregate joined back twice (weights +
-      // rare-doc blocking). The window computes the identical per-token
-      // document count with ONE tok exchange where the join form paid
-      // the tok shuffle three times (dfT partial agg, w join, rareDocs
-      // join — guide §2.4 "two operations keyed the same way share one
-      // exchange"), and ONE persisted frame (df + w columns) now serves
-      // every downstream consumer, halving the cache footprint.
-      // graft.tfidfWin=0 restores the join form (AbProbe hook).
-      val (w, rareDocs, basePersisted) =
-        if (graft.Toggles.on("graft.tfidfWin")) {
-          val tfW = tok.withColumn("df", count(lit(1)).over(Window.partitionBy(col("tok"))))
-            .crossJoin(broadcast(nDocs))
-            .select(col("doc_id"), col("tok"), col("df"),
-              round(col("tf").cast("double") *
-                round(log(col("__n").cast("double") / col("df").cast("double")), 6),
-                6).as("w"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          (tfW.select(col("doc_id"), col("tok"), col("w")),
-            tfW.where(col("df") <= 25).select(col("tok"), col("doc_id")),
-            Seq(tfW))
-        } else {
-          val tf = tok.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val dfT = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-          val wj = tf.join(dfT, Seq("tok")).crossJoin(broadcast(nDocs))
-            .select(col("doc_id"), col("tok"),
-              round(col("tf").cast("double") *
-                round(log(col("__n").cast("double") / col("df").cast("double")), 6),
-                6).as("w"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          (wj, tf.join(dfT.where(col("df") <= 25), Seq("tok"))
-            .select(col("tok"), col("doc_id")),
-            Seq(tf, wj))
-        }
+      // nDocs counts the RAW parquet (identical row count — docs2 is a
+      // pure projection) instead of re-scanning through docs2's
+      // heavy-table repartition + concat just to count rows.
+      // r19 NEGATIVE (tried and reverted, A/B min-of-8 interleaved):
+      // (a) hinting broadcast(docAgg) on both pair sides measured
+      // 0.99x — AQE already broadcast-converts those joins at runtime;
+      // (b) collecting nDocs driver-side and riding it as a literal
+      // instead of the crossJoin(broadcast(1-row frame)) measured
+      // 0.93-0.95x — the extra driver job costs more than the tiny
+      // 1-row BroadcastNestedLoopJoin builds it removed.
+      val nDocs = rawCount(s, dir, "documents", "__n")
+      // df as count(*) OVER (PARTITION BY tok): the per-token document
+      // count with ONE tok exchange, and ONE persisted frame (df + w
+      // columns) serves every downstream consumer (weights and the
+      // rare-doc blocking)
+      val tfW = tok.withColumn("df", count(lit(1)).over(Window.partitionBy(col("tok"))))
+        .crossJoin(broadcast(nDocs))
+        .select(col("doc_id"), col("tok"), col("df"),
+          round(col("tf").cast("double") *
+            round(log(col("__n").cast("double") / col("df").cast("double")), 6),
+            6).as("w"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val w = tfW.select(col("doc_id"), col("tok"), col("w"))
+      val rareDocs = tfW.where(col("df") <= 25).select(col("tok"), col("doc_id"))
       val pairs = rareDocs.select(col("tok"), col("doc_id").as("a"))
         .join(rareDocs.select(col("tok"), col("doc_id").as("b")), Seq("tok"))
         .where(col("a") < col("b"))
         .select(col("a"), col("b")).distinct()
-      if (graft.Toggles.on("graft.tfidfMap")) {
-        // r18 opt 2: per-doc weight VECTOR aggregation. One doc_id
-        // shuffle builds map(tok -> w) + the norm together; candidate
-        // pairs then join the two doc rows and compute the dot product
-        // in-row via map_zip_with over the token intersection. Replaces
-        // the expansion form (pairs x |tokens(a)| rows re-shuffled by
-        // (b,tok), then grouped back by (a,b), plus TWO more norm
-        // joins) — 4 joins + 2 aggregations collapse into 1 aggregation
-        // + 2 joins, and the heavy bytes (weight vectors) move exactly
-        // once, keyed by the doc they belong to (guide §2.3/§8: shuffle
-        // placement decisions on small rows, move payloads once).
-        // Arithmetic is unchanged: every shared-token product is
-        // round(wa*wb, 6) accumulated in DECIMAL(38,10) — exact and
-        // order-independent, so map iteration order cannot move the
-        // result. A candidate pair always shares >= 1 token (pairs come
-        // from a shared rare token), so no empty-intersection rows
-        // appear here that the join form would have dropped.
-        // graft.tfidfMap=0 restores the expansion form (AbProbe hook).
-        // persisted: consumed by BOTH pair sides, and its shared
-        // subtree holds a shuffle (the doc_id aggregation) — the
-        // persist-pays rule; ~5k tiny rows, rotated with the lane's
-        // other persisted frame
-        // map_from_entries over ONE collected struct list (r19, ADVICE
-        // r18 #2): the former map_from_arrays(collect_list(tok),
-        // collect_list(w)) relied on w being provably non-null —
-        // collect_list drops nulls per list independently, so a future
-        // nullable w would silently misalign token->weight pairs. Same
-        // map for non-null w (entries collect in the same row order).
-        val docAgg0 = w.groupBy(col("doc_id")).agg(
+      // per-doc weight VECTOR aggregation: one doc_id shuffle builds
+      // map(tok -> w) + the norm together; candidate pairs join the two
+      // doc rows and compute the dot product in-row over the token
+      // intersection, so the weight vectors move exactly once, keyed by
+      // the doc they belong to (guide §2.3/§8). Every shared-token
+      // product is round(wa*wb, 6) accumulated in DECIMAL(38,10) —
+      // exact and order-independent, so map iteration order cannot
+      // move the result. A candidate pair always shares >= 1 token
+      // (pairs come from a shared rare token).
+      // Persisted: consumed by BOTH pair sides, and its shared subtree
+      // holds a shuffle (the doc_id aggregation) — the persist-pays
+      // rule; rotated with the lane's other persisted frame.
+      // map_from_entries over ONE collected struct list keeps
+      // token->weight pairs aligned even for a nullable w.
+      val docAgg = w.groupBy(col("doc_id")).agg(
           map_from_entries(collect_list(struct(col("tok"), col("w")))).as("m"),
           sqrt(dsumD(round(col("w") * col("w"), 6))).as("nrm"))
-        val docAgg = if (aux)
-          docAgg0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else docAgg0
-        tfidfPersisted.getAndSet(if (aux) basePersisted :+ docAgg else basePersisted)
-          .foreach(_.unpersist(false))
-        // r19: the per-pair dot is ONE codegen'd flat-loop kernel
-        // (CurateKernels.mapDotRound6) instead of three interpreted
-        // HOFs per row (map_zip_with + filter + aggregate — HOFs don't
-        // whole-stage-codegen, the r11 lesson). Arithmetic mirrored
-        // op-for-op; exact decimal accumulation keeps it
-        // order-independent. graft.tfidfDotKernel=0 restores the HOF
-        // chain (AbProbe/EquivProbe hook).
-        val dotCol = if (graft.Toggles.on("graft.tfidfDotKernel")) {
-          import org.apache.spark.sql.graftbridge.Bridge
-          Bridge.column(graft.functions.TfidfMapDot(
-            Bridge.expression(col("ma")), Bridge.expression(col("mb"))))
-        } else {
-          val prods = filter(
-            map_values(map_zip_with(col("ma"), col("mb"),
-              (_, x, y) => round(x * y, 6))),
-            v => v.isNotNull)
-          // the + promotes to DECIMAL(38,9) under the precision cap; the
-          // re-cast is exact here (every element is a 6dp round) and
-          // keeps the accumulator type fixed as the lambda requires
-          aggregate(prods, lit(0).cast(DEC),
-            (acc, v) => (acc + v.cast(DEC)).cast(DEC)).cast("double")
-        }
-        pairs
-          .join(docAgg.select(col("doc_id").as("a"), col("m").as("ma"),
-            col("nrm").as("na")), Seq("a"))
-          .join(docAgg.select(col("doc_id").as("b"), col("m").as("mb"),
-            col("nrm").as("nb")), Seq("b"))
-          .select(col("a").as("doc_a"), col("b").as("doc_b"),
-            round(dotCol / (col("na") * col("nb")), 6).as("cos"))
-          .orderBy("doc_a", "doc_b")
-      } else {
-        tfidfPersisted.getAndSet(basePersisted).foreach(_.unpersist(false))
-        val norms = w.groupBy(col("doc_id"))
-          .agg(sqrt(dsumD(round(col("w") * col("w"), 6))).as("nrm"))
-        val wa = w.select(col("doc_id").as("a"), col("tok"), col("w").as("wa"))
-        val wb = w.select(col("doc_id").as("b"), col("tok"), col("w").as("wb"))
-        val dot = pairs.join(wa, Seq("a")).join(wb, Seq("b", "tok"))
-          .groupBy(col("a"), col("b"))
-          .agg(dsumD(round(col("wa") * col("wb"), 6)).as("dot"))
-        dot
-          .join(norms.select(col("doc_id").as("a"), col("nrm").as("na")), Seq("a"))
-          .join(norms.select(col("doc_id").as("b"), col("nrm").as("nb")), Seq("b"))
-          .select(col("a").as("doc_a"), col("b").as("doc_b"),
-            round(col("dot") / (col("na") * col("nb")), 6).as("cos"))
-          .orderBy("doc_a", "doc_b")
-      }
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      tfidfPersisted.getAndSet(Seq(tfW, docAgg)).foreach(_.unpersist(false))
+      // the per-pair dot is ONE codegen'd flat-loop kernel
+      // (CurateKernels.mapDotRound6) — interpreted HOFs don't
+      // whole-stage-codegen (the r11 lesson)
+      import org.apache.spark.sql.graftbridge.Bridge
+      val dotCol = Bridge.column(graft.functions.TfidfMapDot(
+        Bridge.expression(col("ma")), Bridge.expression(col("mb"))))
+      pairs
+        .join(docAgg.select(col("doc_id").as("a"), col("m").as("ma"),
+          col("nrm").as("na")), Seq("a"))
+        .join(docAgg.select(col("doc_id").as("b"), col("m").as("mb"),
+          col("nrm").as("nb")), Seq("b"))
+        .select(col("a").as("doc_a"), col("b").as("doc_b"),
+          round(dotCol / (col("na") * col("nb")), 6).as("cos"))
+        .orderBy("doc_a", "doc_b")
     }),
 
     // cluster-balanced resampling — topic rebalancing over embedding

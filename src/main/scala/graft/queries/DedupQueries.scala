@@ -27,9 +27,9 @@ object DedupQueries {
 
   // q_jaccard_block consumes its per-doc shingle-hash frame on BOTH
   // sides of a blocked ALL-PAIRS join — persisting it measured 2.68x
-  // (AbProbe graft.lanePersist, min-of-5 same JVM). One generation
-  // kept, rotated per call so rep-major bench reruns never stack
-  // cache entries. The LSH lanes are NOT persisted (measured loss —
+  // (interleaved A/B, min-of-5 same JVM). One generation kept,
+  // rotated per call so rep-major bench reruns never stack cache
+  // entries. The LSH lanes are NOT persisted (measured loss —
   // see lshCandidates).
   private val persisted =
     new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](Nil)
@@ -99,7 +99,7 @@ object DedupQueries {
     * pairs (shingle-hash -> sign -> band -> bucket-join). */
   private def lshCandidates(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    // NOT persisted: an r18 interleaved A/B (AbProbe graft.lanePersist)
+    // NOT persisted: an r18 interleaved A/B
     // measured persisting hs (and hs+bands) LOSING 0.83-0.89x here —
     // the InMemoryRelation materialization barrier costs more than the
     // re-shingling it saves once the documents scan is parallel. (The

@@ -32,9 +32,9 @@ object Q {
     // parquet split atom). For the per-row-HEAVY tables (documents:
     // shingling/hashing; embeddings: vector math) that serializes the
     // expensive narrow stage — repartition them when the scan
-    // under-parallelizes. Fact tables stay as-is HERE: an r18 interleaved
-    // A/B (AbProbe graft.parallelFacts, 5 reps, same JVM) measured the
-    // blanket fact repartition losing on every cheap lane (q_topk 0.30x,
+    // under-parallelizes. Fact tables stay as-is HERE: an r18
+    // interleaved A/B (5 reps, same JVM) measured the blanket fact
+    // repartition losing on every cheap lane (q_topk 0.30x,
     // q_binby_2d 0.30x, q_groupby_multi 0.47x, q_shift_diff 0.57x — the
     // round-robin exchange costs more than the serial partial agg it
     // parallelizes) and winning only on the decimal-moment lanes
@@ -63,14 +63,11 @@ object Q {
     * Column pruning and filter pushdown both cross the exchange
     * (verified in plans/r18), so the shuffle carries only needed
     * columns of surviving rows. No-op at production scale (guarded on
-    * actual scan partitioning, not a core-count constant).
-    * graft.parallelFacts=0 restores the serial read — the AbProbe A/B
-    * hook. */
+    * actual scan partitioning, not a core-count constant). */
   def th(spark: SparkSession, dir: String, name: String): DataFrame = {
     val base = t(spark, dir, name)
     val target = spark.sparkContext.defaultParallelism
-    val parFacts = graft.Toggles.on("graft.parallelFacts")
-    if (parFacts && base.rdd.getNumPartitions < math.min(target, 8))
+    if (base.rdd.getNumPartitions < math.min(target, 8))
       base.repartition(target) else base
   }
 
@@ -88,12 +85,9 @@ object Q {
     spark.read.parquet(s"$dir/$name.parquet").agg(count(lit(1)).as(as))
 
   /** MEMORY_AND_DISK persist for a multi-consumer intermediate inside
-    * a lane (the tfidf discipline). graft.lanePersist=0 skips the
-    * persist — the AbProbe hook that measured each r18 persist against
-    * the recompute plan inside one JVM. */
+    * a lane (the tfidf discipline). */
   def p(df: DataFrame): DataFrame =
-    if (!graft.Toggles.on("graft.lanePersist")) df
-    else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Exact decimal sum of a double expression. */
   def dsum(c: Column): Column = sum(c.cast(DEC))

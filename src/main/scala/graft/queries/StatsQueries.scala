@@ -17,7 +17,7 @@ import Q._
 object StatsQueries {
 
   /** The counts+cumulative-window exact percentile form shared by
-    * q_percentile and (since r19) q_percentile_grouped: one codegen'd
+    * q_percentile and q_percentile_grouped: one codegen'd
     * hash aggregation over (group, column, value) + one window over
     * DISTINCT values only, every stage spillable and parallel across
     * groups x columns. Interpolation mirrors Percentile.getPercentile
@@ -94,70 +94,28 @@ object StatsQueries {
         r(dsumD((col("y") - col("yhat")) * (col("y") - col("yhat")))).as("sum_sq_err"))
     }),
     // exact interpolated percentiles per group (Spark `percentile` ==
-    // DuckDB `quantile_cont`, both type-7 linear interpolation).
-    // r18: computed from distinct-VALUE counts + a per-(group, column)
-    // cumulative window instead of the builtin Percentile aggregate —
-    // the builtin is an ObjectHashAggregate that boxes every row into
-    // per-group OpenHashMaps and re-serializes them between partial and
-    // final (measured 3.3-3.8 s here; parallelizing its scan was a
-    // wash, so the map machinery itself is the cost). The counts form
-    // is one codegen'd hash aggregation over (group, column, value) +
-    // one window over DISTINCT values only, every stage spillable and
-    // parallel — strictly better 100 TB behavior than per-group value
-    // maps. The interpolation below mirrors Percentile.getPercentile
-    // operation-for-operation (position = p * (n-1) with long->double
-    // promotion; rank lookups at floor/ceil+1; the same-key and
-    // zero-fraction early returns; (hi - pos) * loV + (pos - lo) * hiV
-    // left to right), so results are bit-identical to the builtin —
-    // re-proved against the DuckDB oracle at sf0.001/0.01/0.1.
-    // graft.fastPercentile=0 = builtin (AbProbe hook).
-    "q_percentile" -> ((s, dir) => {
-      if (!graft.Toggles.on("graft.fastPercentile"))
-        t(s, dir, "lineitem").groupBy(col("l_returnflag"))
-          .agg(
-            r(expr("percentile(l_quantity, 0.5)"), 6).as("median_qty"),
-            r(expr("percentile(l_extendedprice, 0.25)"), 6).as("p25_price"),
-            r(expr("percentile(l_extendedprice, 0.75)"), 6).as("p75_price"),
-            r(expr("percentile(l_discount, 0.9)"), 6).as("p90_disc"))
-          .orderBy("l_returnflag")
-      else countsWindowPercentiles(s, dir)
-    }),
+    // DuckDB `quantile_cont`, both type-7 linear interpolation),
+    // computed from distinct-VALUE counts + a per-(group, column)
+    // cumulative window ([[countsWindowPercentiles]]) instead of the
+    // builtin Percentile aggregate — the builtin is an
+    // ObjectHashAggregate that boxes every row into per-group
+    // OpenHashMaps and re-serializes them between partial and final
+    // (r18: 2.0x slower here). The counts form is one codegen'd hash
+    // aggregation + one window over DISTINCT values only, every stage
+    // spillable and parallel, and bit-identical to the builtin.
+    "q_percentile" -> ((s, dir) => countsWindowPercentiles(s, dir)),
 
-    // same statistics as q_percentile, historically through the
-    // GroupedPercentile distributed-selection path (4 bounded passes).
-    // r19 (VERDICT r18 #4): the graded lane now runs the
-    // counts+cumulative-window form (shared with q_percentile, proven
-    // bit-identical to the builtin at 3 SFs in r18) — at this
-    // cardinality (3 groups x 3 value columns) the sample/bucket/sort
-    // machinery's 4 passes measured 0.54-0.58x against every
-    // parallelization attempt in r18 and stayed ~40% slower than the
-    // single-pass counts form. The GroupedPercentile OPERATOR is
-    // unchanged (GroupedPercentileSpec still gates it against the
-    // builtin, including its bounded-memory driver guard): it remains
-    // the right shape when (groups x distinct values) is too large to
-    // sort per (group,column) window partition — the counts form
-    // funnels each (group,cid)'s distinct values through ONE window
-    // task, the bucket form spreads them over `buckets` tasks.
-    // graft.gpWindow=0 restores the GroupedPercentile lane (AbProbe/
-    // EquivProbe hook; its r18 A/B negatives — th 0.54x, persisted
-    // long form 0.58x — are recorded in the operator's comments).
-    "q_percentile_grouped" -> ((s, dir) => {
-      if (graft.Toggles.on("graft.gpWindow")) countsWindowPercentiles(s, dir)
-      else {
-        import graft.operators.GroupedPercentile.{exact, Spec}
-        exact(t(s, dir, "lineitem"), Seq("l_returnflag"), Seq(
-          Spec("l_quantity", 0.5, "median_qty"),
-          Spec("l_extendedprice", 0.25, "p25_price"),
-          Spec("l_extendedprice", 0.75, "p75_price"),
-          Spec("l_discount", 0.9, "p90_disc")))
-          .select(col("l_returnflag"),
-            r(col("median_qty"), 6).as("median_qty"),
-            r(col("p25_price"), 6).as("p25_price"),
-            r(col("p75_price"), 6).as("p75_price"),
-            r(col("p90_disc"), 6).as("p90_disc"))
-          .orderBy("l_returnflag")
-      }
-    }),
+    // same statistics as q_percentile, gated against the double-cast
+    // oracle, through the same counts+cumulative-window form. The
+    // GroupedPercentile OPERATOR (VxFrame.percentile;
+    // GroupedPercentileSpec gates it against the builtin) stays the
+    // right shape when (groups x distinct values) is too large to sort
+    // per (group, column) window partition: the counts form funnels
+    // each (group, cid)'s distinct values through ONE window task, the
+    // bucket form spreads them over `buckets` tasks. At this
+    // cardinality (3 groups x 3 value columns) its 4 bounded passes
+    // measured 1.14x slower (r19).
+    "q_percentile_grouped" -> ((s, dir) => countsWindowPercentiles(s, dir)),
 
     // deterministic mode: most frequent value, ties -> smallest value
     "q_mode" -> ((s, dir) => {

@@ -74,20 +74,11 @@ object WindowQueries {
       val staged = base
         .withColumn("__x", xd.cast(Q.DEC))
         .withColumn("__x2", (xd * xd).cast(Q.DEC))
-      // r18 opt 2: one fused staged pass + carry join for all three
-      // statistics (rollingAggMulti) instead of three stacked calls
-      // that each re-ran the block windows over the whole prior result.
-      // graft.rollMulti=0 restores the stacked form (AbProbe hook).
-      val rolled =
-        if (!graft.Toggles.on("graft.rollMulti"))
-          OrderedOps.rollingAgg(OrderedOps.rollingAgg(OrderedOps.rollingAgg(
-            staged, "__x", 5, "__s1", "sum", blockSize = 8192L),
-            "__x2", 5, "__s2", "sum", blockSize = 8192L),
-            "__x", 5, "__n", "count", blockSize = 8192L)
-        else OrderedOps.rollingAggMulti(staged,
-          Seq(OrderedOps.RollSpec("__x", "sum", "__s1"),
-            OrderedOps.RollSpec("__x2", "sum", "__s2"),
-            OrderedOps.RollSpec("__x", "count", "__n")), 5, blockSize = 8192L)
+      // all three statistics in one rollingAggMulti pass
+      val rolled = OrderedOps.rollingAggMulti(staged,
+        Seq(OrderedOps.RollSpec("__x", "sum", "__s1"),
+          OrderedOps.RollSpec("__x2", "sum", "__s2"),
+          OrderedOps.RollSpec("__x", "count", "__n")), 5, blockSize = 8192L)
       rolled.select(col("row_index"), col("__n").as("n"),
           r(col("__s2").cast("double") / col("__n") -
             (col("__s1").cast("double") / col("__n")) *
@@ -95,8 +86,8 @@ object WindowQueries {
         .orderBy("row_index")
     }),
 
-    // rolling MEDIAN through the collected-window machinery
-    // (OrderedOps.rollingArray -> exact interpolated middle): the
+    // rolling MEDIAN through the block-array generator (exact
+    // interpolated middle of each collected window): the
     // non-decomposable rolling aggregate the reference reaches via
     // rolling(...).array (core/rolling.py:4-31), oracle-gated against
     // DuckDB's windowed MEDIAN (also interpolated).
@@ -110,7 +101,7 @@ object WindowQueries {
     }),
 
     // rolling exact quantile (q=0.25, linear interpolation) — same
-    // block-partitioned carry as rolling median, gated against
+    // block-array generator as rolling median, gated against
     // DuckDB's windowed QUANTILE_CONT. Integer-valued doubles and
     // dyadic q keep the interpolation arithmetic exact in both
     // engines regardless of their interpolation formula ordering.

@@ -23,10 +23,10 @@ import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema =
   * batch, so the driver reads only the schema + batch count and each
   * executor task opens the file and decodes its own disjoint batches
   * — no driver materialization at any size. Supported types:
-  * long/int/double/float/string/boolean/binary, naive timestamp[us],
-  * date32, and list / fixed_size_list of numeric/string elements
-  * (the pyarrow shapes embedding and token columns ship in), all
-  * nullable.
+  * long/int/short/byte/decimal128/double/float/string/boolean/binary,
+  * naive timestamp[us], date32, and list / fixed_size_list of
+  * numeric/string elements (the pyarrow shapes embedding and token
+  * columns ship in), all nullable.
   */
 object ArrowIpc {
 
@@ -40,6 +40,9 @@ object ArrowIpc {
   private def scalarArrowType(dt: DataType): ArrowType = dt match {
     case LongType => new ArrowType.Int(64, true)
     case IntegerType => new ArrowType.Int(32, true)
+    case ShortType => new ArrowType.Int(16, true)
+    case ByteType => new ArrowType.Int(8, true)
+    case d: DecimalType => new ArrowType.Decimal(d.precision, d.scale, 128)
     case DoubleType => new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE)
     case FloatType => new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE)
     case StringType => new ArrowType.Utf8()
@@ -416,6 +419,10 @@ object ArrowIpc {
                 v.setSafe(ri, dictIndex(ci)(row.getString(ci))) // dictionary index
               case (LongType, v: BigIntVector) => v.setSafe(ri, row.getLong(ci))
               case (IntegerType, v: IntVector) => v.setSafe(ri, row.getInt(ci))
+              case (ShortType, v: SmallIntVector) => v.setSafe(ri, row.getShort(ci))
+              case (ByteType, v: TinyIntVector) => v.setSafe(ri, row.getByte(ci))
+              case (d: DecimalType, v: DecimalVector) =>
+                v.setSafe(ri, row.getDecimal(ci).setScale(d.scale))
               case (DoubleType, v: Float8Vector) => v.setSafe(ri, row.getDouble(ci))
               case (FloatType, v: Float4Vector) => v.setSafe(ri, row.getFloat(ci))
               case (StringType, v: VarCharVector) =>

@@ -106,7 +106,7 @@ object Bridge {
     * (precision, scale) with HALF_UP, returning null on overflow when
     * `nullOnOverflow`, else throwing the same SparkArithmeticException
     * CheckOverflow raises (used by the rolling block sum kernel to
-    * mirror the window form's ANSI behavior). */
+    * follow Spark's ANSI overflow behavior). */
   def decimalToPrecision(d: org.apache.spark.sql.types.Decimal,
       precision: Int, scale: Int, nullOnOverflow: Boolean)
       : org.apache.spark.sql.types.Decimal =

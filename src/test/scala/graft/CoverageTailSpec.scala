@@ -100,6 +100,27 @@ class CoverageTailSpec extends SparkSpec {
     assert(Readers.open(spark, fp).count() == 3)
   }
 
+  test("Arrow IPC export round-trips tinyint, smallint and decimal(10,2) with nulls") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("b", ByteType), StructField("h", ShortType),
+      StructField("m", DecimalType(10, 2))))
+    val rows = Seq(
+      Row(0L, Byte.MinValue, Short.MinValue, new java.math.BigDecimal("-99999999.99")),
+      Row(1L, null, null, null),
+      Row(2L, Byte.MaxValue, Short.MaxValue, new java.math.BigDecimal("99999999.99")),
+      Row(3L, 0.toByte, (-7).toShort, new java.math.BigDecimal("0.05")),
+      Row(4L, (-1).toByte, null, new java.math.BigDecimal("-1.10")))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val p = java.nio.file.Files.createTempDirectory("graft_arrow_narrow")
+      .resolve("n.arrow").toString
+    VxFrame(df).export(p)
+    val back = ArrowIpc.read(spark, p)
+    assert(back.schema.map(f => (f.name, f.dataType)) ==
+      schema.map(f => (f.name, f.dataType)))
+    assert(back.orderBy("id").collect().toSeq == rows)
+  }
+
   test("Arrow IPC streams multi-batch writes and reads batches in parallel") {
     import org.apache.spark.sql.functions._
     val p = java.nio.file.Files.createTempDirectory("graft_arrow_big")

@@ -261,9 +261,9 @@ class CurateKernelsSpec extends SparkSpec {
     assert(r1.getLong(0) === r2.getLong(0) && r1.getLong(1) === r2.getLong(1))
   }
 
-  // ---- r19: TfidfMapDot (graft.tfidfDotKernel) -----------------------
+  // ---- TfidfMapDot (the q_tfidf_cosine per-pair dot) ------------------
 
-  /** The replaced HOF chain, verbatim from the tfidf lane: per shared
+  /** The HOF chain the kernel replaced, verbatim: per shared
     * key round(x*y, 6), null products filtered, exact decimal(38,10)
     * left fold, cast back to double. */
   private def hofDot(ma: org.apache.spark.sql.Column,

@@ -4,28 +4,14 @@ import org.apache.spark.sql.functions._
 import graft.operators.OrderedOps
 import graft.operators.OrderedOps.RollSpec
 
-/** Focused spec for the r19 block-array generator kernels
+/** Focused spec for the block-array generator kernels
   * ([[graft.functions.RollingBlockAgg]] /
-  * [[graft.functions.RollingBlockQuantile]], `graft.rollBlockGen`):
-  * the generator path must be BIT-IDENTICAL to the r18 window+carry
-  * join form it replaces (which is itself pinned to global windows by
-  * OrderedOpsSpec and to the DuckDB oracle by the battery), across
-  * hostile inputs — nulls, NaN, decimals, ints — and hostile layouts:
-  * short last block, exact-multiple last block, window == blockSize,
-  * window == 1, single block. Validation must keep the dense-index
-  * contract, including the duplicate-with-aligned-max class the join
-  * form could not see (ADVICE r18 #1). */
+  * [[graft.functions.RollingBlockQuantile]]) on hostile inputs: map
+  * payloads, output-name collisions, decimal overflow, and sparse /
+  * duplicated indexes (including the duplicate-with-aligned-max
+  * class). Random layouts and values against a naive reference are in
+  * RollingPropertySpec. */
 class RollingBlockGenSpec extends SparkSpec {
-
-  /** Build plans under a toggle value — plans bake the path in at
-    * construction time, so collect() may run after restore. */
-  private def withProp[A](prop: String, v: String)(f: => A): A = {
-    val old = System.getProperty(prop)
-    System.setProperty(prop, v)
-    try f
-    finally if (old == null) System.clearProperty(prop)
-            else System.setProperty(prop, old)
-  }
 
   /** 100 rows, 7 input splits: double with nulls, double with NaN and
     * nulls, decimal(12,2) with nulls, int with nulls. */
@@ -51,52 +37,6 @@ class RollingBlockGenSpec extends SparkSpec {
     case x => x
   }
 
-  private def byIndex(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Option[Any]]] =
-    df.collect().map { r =>
-      r.getLong(r.fieldIndex("row_index")) ->
-        r.schema.fieldNames.toSeq.filter(_ != "row_index").sorted
-          .map(n => Option(r.get(r.fieldIndex(n))).map(norm))
-    }.toMap
-
-  // (window, blockSize): short last block, exact-multiple last block,
-  // window == blockSize, window == 1, single block
-  private val layouts = Seq((3, 7L), (1, 7L), (4, 10L), (5, 5L), (4, 25L), (7, 100L))
-
-  test("rollingAggMulti generator == window+carry join form (bit-exact)") {
-    val specs = Seq(
-      RollSpec("d", "sum", "sd"), RollSpec("dn", "sum", "sn"),
-      RollSpec("dec", "sum", "sdec"), RollSpec("iv", "sum", "si"),
-      RollSpec("d", "count", "cd"), RollSpec("dn", "min", "mn"),
-      RollSpec("dn", "max", "mx"), RollSpec("dec", "max", "mdec"),
-      RollSpec("iv", "min", "mi"))
-    for ((w, bs) <- layouts) {
-      val on = withProp("graft.rollBlockGen", "1")(
-        OrderedOps.rollingAggMulti(hostile, specs, w, blockSize = bs))
-      val off = withProp("graft.rollBlockGen", "0")(
-        OrderedOps.rollingAggMulti(hostile, specs, w, blockSize = bs))
-      assert(on.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
-        off.schema.fields.map(f => (f.name, f.dataType)).toSeq, s"w=$w bs=$bs")
-      assert(byIndex(on) === byIndex(off), s"w=$w bs=$bs")
-    }
-  }
-
-  test("rollingMedian/rollingQuantile generator == rollingArray+kernel form (bit-exact)") {
-    for ((w, bs) <- layouts.filter(_._1 > 1)) {
-      val mOn = withProp("graft.rollBlockGen", "1")(
-        OrderedOps.rollingMedian(hostile, "dn", w, "med", blockSize = bs))
-      val mOff = withProp("graft.rollBlockGen", "0")(
-        OrderedOps.rollingMedian(hostile, "dn", w, "med", blockSize = bs))
-      assert(byIndex(mOn) === byIndex(mOff), s"median w=$w bs=$bs")
-      for (q <- Seq(0.0, 0.25, 0.9, 1.0)) {
-        val qOn = withProp("graft.rollBlockGen", "1")(
-          OrderedOps.rollingQuantile(hostile, "dn", w, q, "rq", blockSize = bs))
-        val qOff = withProp("graft.rollBlockGen", "0")(
-          OrderedOps.rollingQuantile(hostile, "dn", w, q, "rq", blockSize = bs))
-        assert(byIndex(qOn) === byIndex(qOff), s"q=$q w=$w bs=$bs")
-      }
-    }
-  }
-
   test("map-typed payload columns ride the generator path untouched") {
     // the generator's own index sort has no orderability requirement
     // on payload fields (unlike e.g. a sort_array formulation — the
@@ -113,44 +53,63 @@ class RollingBlockGenSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("generator falls back to the join form on output-name collision") {
-    // withColumn-replace semantics: the join form REPLACES an existing
-    // column of the same name; the generator path declines and the
-    // operator must still produce the replace behavior via fallback.
-    val out = OrderedOps.rollingAggMulti(hostile, Seq(RollSpec("d", "sum", "dn")),
-      3, blockSize = 7L)
-    assert(out.columns.count(_ == "dn") === 1)
-    val both = withProp("graft.rollBlockGen", "0")(
-      OrderedOps.rollingAggMulti(hostile, Seq(RollSpec("d", "sum", "dn")),
-        3, blockSize = 7L))
-    assert(byIndex(out) === byIndex(both))
+  test("output-name collision replaces the input column in place") {
+    // withColumn-replace semantics, computed by the generator itself:
+    // values equal the global-window reference, the output keeps the
+    // input's column order with the replaced column in its position
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    def generated(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collect { case g: Generate => g.generator }
+        .exists(g => g.isInstanceOf[graft.functions.RollingBlockAgg] ||
+          g.isInstanceOf[graft.functions.RollingBlockQuantile])
+    def values(df: org.apache.spark.sql.DataFrame, c: String): Map[Long, Option[Any]] =
+      df.select(col("row_index"), col(c)).collect()
+        .map(r => r.getLong(0) -> Option(r.get(1)).map(norm)).toMap
+    val win = Window.orderBy(col("row_index")).rowsBetween(-2, 0)
+    val reordered = hostile.select("d", "row_index", "dn", "dec", "iv")
+    val cols = Seq("d", "row_index", "dn", "dec", "iv")
+    // rollingAggMulti: one colliding output (its own source column) and
+    // one new output, appended
+    val agg = OrderedOps.rollingAggMulti(reordered,
+      Seq(RollSpec("d", "sum", "d"), RollSpec("dn", "max", "mx")), 3, blockSize = 7L)
+    assert(generated(agg))
+    assert(agg.columns.toSeq === cols :+ "mx")
+    assert(values(agg, "d") === values(hostile.withColumn("e", sum(col("d")).over(win)), "e"))
+    assert(values(agg, "mx") === values(hostile.withColumn("e", max(col("dn")).over(win)), "e"))
+    assert(values(agg, "dn") === values(hostile, "dn"))
+    // rollingMedian / rollingQuantile writing over another input column
+    val med = OrderedOps.rollingMedian(reordered, "d", 3, "dn", blockSize = 7L)
+    assert(generated(med))
+    assert(med.columns.toSeq === cols)
+    assert(values(med, "dn") === values(hostile.withColumn("e",
+      expr("percentile(d, 0.5D) over (order by row_index rows between 2 preceding and current row)")), "e"))
+    val q = OrderedOps.rollingQuantile(reordered, "d", 3, 1.0, "d", blockSize = 7L)
+    assert(generated(q))
+    assert(q.columns.toSeq === cols)
+    assert(values(q, "d") === values(hostile.withColumn("e", max(col("d")).over(win)), "e"))
   }
 
-  test("decimal sum overflow: throws under ANSI, null with ANSI off — both forms") {
+  test("decimal sum overflow: throws under ANSI, null with ANSI off") {
     val big = new java.math.BigDecimal("9" * 38)
     def frame = spark.range(10).select(col("id").as("row_index"),
       when(col("id") < 2, lit(big)).otherwise(lit(1).cast("decimal(38,0)")).as("v"))
-    def run(gen: String): Map[Long, Option[Any]] = withProp("graft.rollBlockGen", gen)(
-      OrderedOps.rollingAggMulti(frame, Seq(RollSpec("v", "sum", "sv")), 2,
-        blockSize = 7L))
-      .collect().map(r => r.getLong(0) -> Option(r.get(r.fieldIndex("sv")))).toMap
+    def run(): Map[Long, Option[Any]] =
+      OrderedOps.rollingAggMulti(frame, Seq(RollSpec("v", "sum", "sv")), 2, blockSize = 7L)
+        .collect().map(r => r.getLong(0) -> Option(r.get(r.fieldIndex("sv")))).toMap
     // ANSI on (this engine's default): 2 x 1e38-ish overflows -> error
-    for (v <- Seq("1", "0")) {
-      val e = intercept[Exception](run(v))
-      def msgs(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
-      assert(msgs(e).exists(m => m != null &&
-        (m.contains("Decimal(38, 0)") || m.contains("overflow"))), s"gen=$v: $e")
-    }
-    // ANSI off: overflow -> null, identically in both forms
+    val e = intercept[Exception](run())
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
+    assert(msgs(e).exists(m => m != null &&
+      (m.contains("Decimal(38, 0)") || m.contains("overflow"))), e.toString)
+    // ANSI off: overflow -> null
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try {
-      for (v <- Seq("1", "0")) {
-        val m = run(v)
-        assert(m(1L).isEmpty, s"rollBlockGen=$v: overflow must be null with ansi off")
-        assert(m(0L).contains(new java.math.BigDecimal(big.toString)), s"rollBlockGen=$v")
-        assert(m(3L).contains(java.math.BigDecimal.valueOf(2).setScale(0)), s"rollBlockGen=$v")
-      }
+      val m = run()
+      assert(m(1L).isEmpty, "overflow must be null with ansi off")
+      assert(m(0L).contains(new java.math.BigDecimal(big.toString)))
+      assert(m(3L).contains(java.math.BigDecimal.valueOf(2).setScale(0)))
     } finally spark.conf.set("spark.sql.ansi.enabled", "true")
   }
 
