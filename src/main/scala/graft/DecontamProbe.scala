@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Isolated A/B probe for the clean-corpus decontamination pair —
   * hash-lane (explode every gram into the semi-join) vs bloom-lane
@@ -54,7 +55,7 @@ object DecontamProbe {
 
     val listener = new ShuffleBytesListener
     spark.sparkContext.addSparkListener(listener)
-    def drained(): Long = ListenerDrain.drained(() => listener.bytes.get())
+    def drained(): Long = { Bridge.drainListenerBus(spark.sparkContext); listener.bytes.get() }
     def shuffleBytesOf(run: () => Unit): Long = {
       run()
       val before = drained()

@@ -87,6 +87,10 @@ object GraftExtensions {
     // optimizer tier: conf-gated rewrite of no-equi-key range joins
     // into binned equi-joins (see graft.plans.RangeJoinRule)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule)
+    // rolling statistics: chained Rolling nodes collapse into one, which
+    // plans as one streaming RollingExec (see graft.plans.Rolling)
+    ext.injectOptimizerRule(_ => graft.plans.CollapseRolling)
+    ext.injectPlannerStrategy(_ => graft.plans.RollingStrategy)
 
     def reg(name: String, clazz: Class[_])(builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((FunctionIdentifier(name),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Isolated A/B probe for the incremental-dedup pair — exact
   * hash-dictionary join vs the bloom-prefiltered lane
@@ -49,7 +50,7 @@ object IncDedupProbe {
 
     val listener = new ShuffleBytesListener
     spark.sparkContext.addSparkListener(listener)
-    def drained(): Long = ListenerDrain.drained(() => listener.bytes.get())
+    def drained(): Long = { Bridge.drainListenerBus(spark.sparkContext); listener.bytes.get() }
     def shuffleBytesOf(run: () => Unit): Long = {
       run()
       val before = drained()

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+
+import graft.plans.{Rolling, RollingSpec, RollingStrategy}
 
 /** Scale-safe ordered operators: shift / diff / rolling over a total
   * order WITHOUT a global single-reducer `Window.orderBy`.
@@ -23,10 +25,11 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   *      block).
   *
   * shift, rollingArray and cumsum run exactly that plan. The rolling
-  * aggregates, median and quantile run the same decomposition as a
-  * block-array generator instead (one collected row per block plus the
-  * previous block's window−1 boundary rows, see
-  * [[graft.functions.RollingBlockAgg]]).
+  * statistics run the same decomposition as one physical operator
+  * instead: a [[graft.plans.Rolling]] node, planned as one hash exchange
+  * on the block id, one local sort, and one streaming pass that takes
+  * the previous block's window−1 boundary rows as carries
+  * ([[RollingExec]]).
   *
   * Carry-side join strategy: the carry has `p` (or `window-1`) rows per
   * block, so its total size is `p · nBlocks` — tiny at w=3, but ~1e10
@@ -57,8 +60,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * Duplicate index values arranged so the block max still matches —
   * formerly a second residual class — are now detected: shift
   * collapses carries per (__blk,__pos) and raises on a duplicate
-  * count (r19, ADVICE r18 #1), and the rolling generator kernel
-  * validates per-row block contiguity.)
+  * count (r19, ADVICE r18 #1), and [[RollingExec]] validates per-row
+  * block contiguity.)
   */
 object OrderedOps {
   val DefaultBlockSize: Long = 1L << 20
@@ -91,47 +94,6 @@ object OrderedOps {
     * (valid for dense indexes; sparse ones fail the staged guards). */
   private def posIn(rowIndex: String, bs: Long): Column =
     col(rowIndex) - blkOf(rowIndex, bs) * lit(bs)
-
-  /** Block-array frames for the generator kernels: ONE row per block —
-    * `__items` collects the block's rows (leading `__i` = rowIndex as
-    * long, `rowIndex` first among the payload fields), `__carry`
-    * collects the previous block's window−1 boundary rows (value
-    * columns only), joined on the block id (nBlocks carry rows total).
-    * The boundary rows are an arithmetic projection of the raw frame
-    * (rowIndex % bs), like [[shift]]'s carries. */
-  private def blockGenFrames(df: DataFrame, rowIndex: String, bs: Long,
-                             window: Int, carryCols: Seq[String]): DataFrame = {
-    val payload = rowIndex +: df.columns.filterNot(_ == rowIndex).toSeq
-    val itemStruct = struct(
-      (col(rowIndex).cast("long").as("__i") +: payload.map(col)): _*)
-    val items = df.groupBy(blkOf(rowIndex, bs).as("__blk"))
-      .agg(collect_list(itemStruct).as("__items"))
-    // r19 NEGATIVE (tried and reverted, A/B min-of-5 interleaved):
-    // deriving the carries as tail slices of the items aggregation
-    // (slice(sort_array(__items), -(w-1), w-1) shifted to blk+1) to
-    // skip this second raw-frame branch measured 1.04x / 0.95x /
-    // 0.91x on q_rolling_block/median/quantile — the duplicated
-    // collect_list aggregation (the items exchange did NOT
-    // ReusedExchange in the static plan) plus the per-block
-    // sort_array cost as much as the raw branch's index-chain
-    // recompute, and it would have added an orderability requirement
-    // (sort_array over item structs) the generator itself doesn't
-    // have. Keep the raw-frame carries.
-    val pos = posIn(rowIndex, bs)
-    val carryStruct = struct(
-      (col(rowIndex).cast("long").as("__i") +: carryCols.map(col)): _*)
-    val carries = df.where(pos >= lit(bs) - (window - 1))
-      .groupBy((blkOf(rowIndex, bs) + 1L).as("__blk"))
-      .agg(collect_list(carryStruct).as("__carry"))
-    items.join(hinted(carries, window - 1), Seq("__blk"), "left")
-  }
-
-  /** Payload field order + schema fed to the generators (rowIndex
-    * first, then the other input columns in order). */
-  private def payloadSchema(df: DataFrame, rowIndex: String): (Seq[String], StructType) = {
-    val payload = rowIndex +: df.columns.filterNot(_ == rowIndex).toSeq
-    (payload, StructType(payload.map(c => df.schema(df.schema.fieldIndex(c)))))
-  }
 
   private def staged(df: DataFrame, rowIndex: String, blockSize: Long): DataFrame = {
     val asc = Window.partitionBy(col("__blk")).orderBy(col(rowIndex).asc)
@@ -298,9 +260,9 @@ object OrderedOps {
 
   /** Trailing rolling aggregate over `window` rows in `rowIndex` order
     * (reference: core/dataframe.py:5656 rolling, core/rolling.py:4-31 —
-    * the reference exposes sum/array over the sliding matrix; here the
-    * decomposable aggregates sum/count/mean/min/max). Partial windows
-    * at the global head match rowsBetween(-(w-1), 0) edge behavior.
+    * the reference exposes sum/array over the sliding matrix; here any
+    * [[graft.plans.RollingSpec]] statistic). Partial windows at the
+    * global head match rowsBetween(-(w-1), 0) edge behavior.
     *
     * One-spec [[rollingAggMulti]]. */
   def rollingAgg(df: DataFrame, column: String, window: Int, as: String, how: String,
@@ -310,15 +272,20 @@ object OrderedOps {
     rollingAggMulti(df, Seq(RollSpec(column, how, as)), window, rowIndex,
       blockSize, validate)
 
-  /** One rolling aggregate request for [[rollingAggMulti]]. */
-  final case class RollSpec(column: String, how: String, as: String)
+  /** One rolling request for [[rollingAggMulti]]: statistic `how` of
+    * `column` as `as`; `q` is the fraction for how = "quantile". */
+  final case class RollSpec(column: String, how: String, as: String, q: Double = 0.5)
 
-  /** N trailing rolling aggregates (sum/count/min/max) in ONE pass of
-    * the block-array generator ([[graft.functions.RollingBlockAgg]]):
-    * every statistic is computed in one flat loop over the block's
-    * rows plus the previous block's window−1 carried rows. An output
-    * name that is already an input column replaces that column in
-    * place (withColumn semantics). */
+  /** N trailing rolling statistics (sum, count, min, max, mean, var,
+    * std, median, quantile) as one [[graft.plans.Rolling]] node, run as
+    * one streaming pass ([[RollingExec]]); chained calls with the same
+    * rowIndex, block size and validation collapse into one node
+    * ([[graft.plans.CollapseRolling]]).
+    *
+    * Column contract, shared by the whole ordered family: the input
+    * columns in input order (`rowIndex` is never moved), then the new
+    * outputs in spec order; an output whose name is already an input
+    * column replaces that column in place. */
   def rollingAggMulti(df: DataFrame, specs: Seq[RollSpec], window: Int,
                       rowIndex: String = "row_index",
                       blockSize: Long = DefaultBlockSize,
@@ -327,42 +294,26 @@ object OrderedOps {
     require(specs.nonEmpty, "rollingAggMulti: no specs")
     require(specs.map(_.as).distinct.size == specs.size,
       "rollingAggMulti: duplicate output names")
-    specs.find(s => !RollHows(s.how)).foreach(s =>
+    require(!specs.exists(_.as == rowIndex),
+      s"rollingAggMulti: an output must not replace the row index '$rowIndex'")
+    specs.find(s => !RollingSpec.Hows(s.how)).foreach(s =>
       throw new IllegalArgumentException(s"unknown rolling agg: ${s.how}"))
     val bs = effectiveBlockSize(blockSize, window - 1)
     require(bs >= window, s"blockSize=$bs must be >= window=$window")
-    val carryCols = specs.map(_.column).distinct
-    val (payload, pSchema) = payloadSchema(df, rowIndex)
-    val (genNames, replace) = replacingOutputs(df.columns.toSeq, specs.map(_.as))
-    val joined = blockGenFrames(df, rowIndex, bs, window, carryCols)
-    val carrySchema = StructType(StructField("__i", LongType, nullable = false) +:
-      carryCols.map(c => df.schema(df.schema.fieldIndex(c))))
-    val gen = graft.functions.RollingBlockAgg(
-      Bridge.expression(col("__items")), Bridge.expression(col("__carry")),
-      Bridge.expression(col("__blk")), window, bs,
-      specs.map(_.how), specs.map(s => 1 + payload.indexOf(s.column)),
-      specs.map(s => 1 + carryCols.indexOf(s.column)),
-      genNames, pSchema, carrySchema, validate,
-      ansi = df.sparkSession.conf.get("spark.sql.ansi.enabled", "true").toBoolean)
-    replace(joined.select(Bridge.column(gen)))
-  }
-
-  private val RollHows = Set("sum", "count", "min", "max")
-
-  /** withColumn-replace semantics for the generators: an output name
-    * that is already an input column is generated under a temporary
-    * name, then selected back in the input's column order with the
-    * output in the replaced column's position (other outputs follow).
-    * Returns the names to generate and the projection to apply to the
-    * generator output. */
-  private def replacingOutputs(input: Seq[String], outs: Seq[String])
-      : (Seq[String], DataFrame => DataFrame) = {
-    val clash = outs.filter(input.contains).toSet
-    if (clash.isEmpty) return (outs, identity)
-    def tmp(o: String): String = if (clash(o)) s"__rollout_$o" else o
-    (outs.map(tmp), g => g.select(
-      input.map(c => if (clash(c)) col(tmp(c)).as(c) else col(c)) ++
-        outs.filterNot(clash).map(col): _*))
+    val child = Bridge.logicalPlan(df)
+    def attr(c: String) = child.output(df.schema.fieldIndex(c))
+    val rolled = specs.map { s =>
+      if (!Set("count", "min", "max")(s.how)) requireNumeric(df, s.column, s"rolling ${s.how}")
+      RollingSpec(attr(s.column), s.how, window, s.q, s.as)()
+    }
+    val node = Rolling(rolled, attr(rowIndex), bs, validate, child)
+    val outs = rolled.map(_.toAttribute)
+    val replacing = outs.filter(o => df.columns.contains(o.name))
+    val plan = if (replacing.isEmpty) node else Project(
+      child.output.map(a => replacing.find(_.name == a.name).getOrElse(a)) ++
+        outs.filterNot(replacing.contains), node)
+    Bridge.ensureStrategy(df.sparkSession, RollingStrategy)
+    Bridge.ofRows(df.sparkSession, plan)
   }
 
   def rollingSum(df: DataFrame, column: String, window: Int, as: String,
@@ -370,45 +321,26 @@ object OrderedOps {
                  blockSize: Long = DefaultBlockSize): DataFrame =
     rollingAgg(df, column, window, as, "sum", rowIndex, blockSize)
 
-  /** Rolling mean = rolling sum / rolling non-null count (one pass of
-    * each; both reuse the same staged block computation shape). */
+  /** Rolling mean: the rolling sum cast to double over the rolling
+    * non-null count. */
   def rollingMean(df: DataFrame, column: String, window: Int, as: String,
                   rowIndex: String = "row_index",
                   blockSize: Long = DefaultBlockSize): DataFrame =
-    rollingAggMulti(df, Seq(RollSpec(column, "sum", "__rsum"),
-        RollSpec(column, "count", "__rcnt")), window, rowIndex, blockSize)
-      .withColumn(as, col("__rsum").cast("double") / col("__rcnt"))
-      .drop("__rsum", "__rcnt")
+    rollingAgg(df, column, window, as, "mean", rowIndex, blockSize)
 
-  /** Rolling population variance from the decomposable moments
-    * (Σx² /n − (Σx/n)²) — three block-partitioned passes, no global
-    * window, same boundary-carry machinery. All-null windows yield
-    * null like the other rolling aggregates. */
+  /** Rolling population variance, two-pass over each window (stable at
+    * any offset). All-null windows yield null like the other rolling
+    * aggregates. */
   def rollingVar(df: DataFrame, column: String, window: Int, as: String,
                  rowIndex: String = "row_index",
-                 blockSize: Long = DefaultBlockSize): DataFrame = {
-    val x = col(column).cast("double")
-    val staged3 = rollingAggMulti(df.withColumn("__rx2", x * x),
-      Seq(RollSpec(column, "sum", "__rsum"),
-        RollSpec("__rx2", "sum", "__rsq"),
-        RollSpec(column, "count", "__rcnt")), window, rowIndex, blockSize)
-    staged3.withColumn(as,
-        when(col("__rcnt") > 0,
-          col("__rsq").cast("double") / col("__rcnt") -
-            (col("__rsum").cast("double") / col("__rcnt")) *
-              (col("__rsum").cast("double") / col("__rcnt"))))
-      .drop("__rx2", "__rsum", "__rsq", "__rcnt")
-  }
+                 blockSize: Long = DefaultBlockSize): DataFrame =
+    rollingAgg(df, column, window, as, "var", rowIndex, blockSize)
 
-  /** Rolling population standard deviation (√[[rollingVar]]; tiny
-    * negative variances from float cancellation clamp to 0, but an
-    * all-null window stays null — `greatest` alone would turn the
-    * null variance into 0.0 because Spark's greatest skips nulls). */
+  /** Rolling population standard deviation (√[[rollingVar]]). */
   def rollingStd(df: DataFrame, column: String, window: Int, as: String,
                  rowIndex: String = "row_index",
                  blockSize: Long = DefaultBlockSize): DataFrame =
-    rollingVar(df, column, window, as, rowIndex, blockSize)
-      .withColumn(as, when(col(as).isNotNull, sqrt(greatest(col(as), lit(0.0)))))
+    rollingAgg(df, column, window, as, "std", rowIndex, blockSize)
 
   /** Sliding-window ARRAY — the reference's `rolling(...).array`
     * accessor (core/rolling.py:4-31: `edge="right"` exposes, for each
@@ -553,18 +485,17 @@ object OrderedOps {
     * (quantile_cont 0.5) over the window's non-null values, null for
     * an all-null window — matching DuckDB/NumPy median semantics.
     * Median is not decomposable into carried partial aggregates, so
-    * the generator gathers and sorts each row's window (O(window) per
-    * row, exact, still block-partitioned: no global window). */
+    * each row's window is gathered and sorted (O(window) per row, exact,
+    * still block-partitioned: no global window). */
   def rollingMedian(df: DataFrame, column: String, window: Int, as: String,
                     rowIndex: String = "row_index",
                     blockSize: Long = DefaultBlockSize): DataFrame = {
     requireNumeric(df, column, "rollingMedian")
-    rollingOrderStat(df, column, window, as, 0.5, midpoint = true,
-      rowIndex, blockSize)
+    rollingAgg(df, column, window, as, "median", rowIndex, blockSize)
   }
 
-  /** Order statistics over non-numeric columns are ill-defined here
-    * (the value column is cast to double before gathering); fail fast. */
+  /** Order statistics and moments over non-numeric columns are
+    * ill-defined here (the value column is cast to double); fail fast. */
   private def requireNumeric(df: DataFrame, column: String, op: String): Unit =
     df.schema(column).dataType match {
       case _: org.apache.spark.sql.types.NumericType |
@@ -572,28 +503,6 @@ object OrderedOps {
       case dt => throw new IllegalArgumentException(
         s"OrderedOps.$op: numeric column required, got ${dt.catalogString} for '$column'")
     }
-
-  /** Shared generator path for rollingMedian / rollingQuantile
-    * ([[graft.functions.RollingBlockQuantile]]): gather + sort +
-    * interpolate per row in one flat loop over the block array. */
-  private def rollingOrderStat(df: DataFrame, column: String, window: Int,
-                               as: String, q: Double, midpoint: Boolean,
-                               rowIndex: String, blockSize: Long): DataFrame = {
-    val bs = effectiveBlockSize(blockSize, window - 1)
-    require(bs >= window, s"blockSize=$bs must be >= window=$window")
-    val dfd = df.withColumn("__rq_x", col(column).cast("double"))
-    val (payload, pSchema) = payloadSchema(dfd, rowIndex)
-    val (Seq(genName), replace) = replacingOutputs(df.columns.toSeq, Seq(as))
-    val joined = blockGenFrames(dfd, rowIndex, bs, window, Seq("__rq_x"))
-    val carrySchema = StructType(Seq(StructField("__i", LongType, nullable = false),
-      StructField("__rq_x", DoubleType)))
-    val gen = graft.functions.RollingBlockQuantile(
-      Bridge.expression(col("__items")), Bridge.expression(col("__carry")),
-      Bridge.expression(col("__blk")), window, bs, q, midpoint,
-      1 + payload.indexOf("__rq_x"), 1, genName, pSchema, carrySchema,
-      validate = true)
-    replace(joined.select(Bridge.column(gen))).drop("__rq_x")
-  }
 
   /** Trailing rolling exact quantile with linear interpolation (numpy
     * 'linear' / SQL percentile_cont semantics): position q·(n−1) over
@@ -606,7 +515,7 @@ object OrderedOps {
                       blockSize: Long = DefaultBlockSize): DataFrame = {
     require(q >= 0.0 && q <= 1.0, s"quantile out of range: $q")
     requireNumeric(df, column, "rollingQuantile")
-    rollingOrderStat(df, column, window, as, q, midpoint = false,
-      rowIndex, blockSize)
+    rollingAggMulti(df, Seq(RollSpec(column, "quantile", as, q)), window, rowIndex,
+      blockSize)
   }
 }

@@ -112,4 +112,32 @@ object Bridge {
       : org.apache.spark.sql.types.Decimal =
     d.toPrecision(precision, scale,
       org.apache.spark.sql.types.Decimal.ROUND_HALF_UP, nullOnOverflow, null)
+
+  /** A frame's analyzed logical plan, and a frame over a logical plan
+    * (`Dataset.logicalPlan`/`ofRows` are `private[sql]`): how engine
+    * operators put their own plan nodes into a query. */
+  def logicalPlan(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
+
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Adds `strategy` to a session whose planner lacks it — a session
+    * built without [[graft.GraftExtensions]] (which injects it) could not
+    * plan the engine's own logical nodes otherwise. */
+  def ensureStrategy(spark: org.apache.spark.sql.SparkSession,
+      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    if (!cs.sessionState.planner.strategies.contains(strategy))
+      cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ strategy
+  }
+
+  /** Blocks until every listener event posted so far has been delivered
+    * (`SparkContext.listenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -228,11 +228,12 @@ class DenseLookupJoinSpec extends SparkSpec {
         jobs.incrementAndGet(); ()
       }
     }
-    // the listener bus drains asynchronously (and is private[spark]):
-    // the shared stable-window poll
-    def drained(): Int =
-      ListenerDrain.drained(() => jobs.get().toLong, windowMs = 100,
-        maxWaitMs = 10000).toInt
+    // the listener bus delivers asynchronously (and is private[spark]):
+    // wait until it has delivered every event posted so far
+    def drained(): Int = {
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+      jobs.get()
+    }
     val fixedDim = dim.select(col("k"), col("d"), col("i"), col("b"))
     spark.sparkContext.addSparkListener(listener)
     try {

@@ -241,10 +241,9 @@ class NpySpec extends SparkSpec {
     val got = try {
       val df = Npy.fromNpz(spark, path)
       val rows = df.orderBy("ids").collect()
-      // the bus drains asynchronously; poll until the task counts stop
-      // changing before asserting on them
-      ListenerDrain.drained(() => stageTasks.size.toLong, windowMs = 100,
-        maxWaitMs = 10000)
+      // the bus delivers asynchronously; drain it before asserting on
+      // the task counts
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
       rows
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(got.length == n)

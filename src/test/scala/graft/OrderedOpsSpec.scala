@@ -331,12 +331,14 @@ class OrderedOpsSpec extends SparkSpec {
 
   test("large-window carry is NOT broadcast-hinted (small windows are)") {
     // with autoBroadcast disabled, a BroadcastExchange can only come
-    // from the explicit hint — present at w=3, absent beyond the
-    // SmallCarryRowsPerBlock guard (the O(window·nBlocks) OOM hazard)
+    // from the explicit hint — present at p=3, absent beyond the
+    // SmallCarryRowsPerBlock guard (the O(window·nBlocks) OOM hazard).
+    // shift is the carry-join operator; the rolling statistics have no
+    // carry join (RollingExec takes carries through its own exchange)
     val d = spark.range(2000)
       .select(col("id").as("row_index"), col("id").cast("double").as("x"))
-    def planOf(w: Int): String =
-      OrderedOps.rollingSum(d, "x", w, "rs", blockSize = 600L)
+    def planOf(p: Int): String =
+      OrderedOps.shift(d, "x", p, as = Some("s"), blockSize = 600L)
         .queryExecution.executedPlan.toString
     val conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

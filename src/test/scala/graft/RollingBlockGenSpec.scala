@@ -1,15 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.OrderedOps
+import graft.operators.{OrderedOps, RollingExec}
 import graft.operators.OrderedOps.RollSpec
 
-/** Focused spec for the block-array generator kernels
-  * ([[graft.functions.RollingBlockAgg]] /
-  * [[graft.functions.RollingBlockQuantile]]) on hostile inputs: map
-  * payloads, output-name collisions, decimal overflow, and sparse /
-  * duplicated indexes (including the duplicate-with-aligned-max
-  * class). Random layouts and values against a naive reference are in
+/** Focused spec for the streaming rolling operator
+  * ([[graft.operators.RollingExec]]) on hostile inputs: map payloads,
+  * output-name collisions, decimal overflow, and sparse / duplicated
+  * indexes (including the duplicate-with-aligned-max class). Random
+  * layouts and values against a naive reference are in
   * RollingPropertySpec. */
 class RollingBlockGenSpec extends SparkSpec {
 
@@ -37,10 +36,11 @@ class RollingBlockGenSpec extends SparkSpec {
     case x => x
   }
 
-  test("map-typed payload columns ride the generator path untouched") {
-    // the generator's own index sort has no orderability requirement
-    // on payload fields (unlike e.g. a sort_array formulation — the
-    // r19 carry-derive negative); a map column must pass through
+  test("map-typed payload columns pass through the rolling operator untouched") {
+    // the operator's sort is on (block, row index) only: no
+    // orderability requirement on payload fields (unlike e.g. a
+    // sort_array formulation — the r19 carry-derive negative); a map
+    // column must pass through
     val withMap = hostile.withColumn("mcol", map(lit("k"), col("d")))
     val viaMap = OrderedOps.rollingAggMulti(withMap,
       Seq(RollSpec("d", "sum", "sd")), 3, blockSize = 7L)
@@ -54,15 +54,12 @@ class RollingBlockGenSpec extends SparkSpec {
   }
 
   test("output-name collision replaces the input column in place") {
-    // withColumn-replace semantics, computed by the generator itself:
+    // withColumn-replace semantics on the Rolling node's output:
     // values equal the global-window reference, the output keeps the
     // input's column order with the replaced column in its position
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.catalyst.plans.logical.Generate
     def generated(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.collect { case g: Generate => g.generator }
-        .exists(g => g.isInstanceOf[graft.functions.RollingBlockAgg] ||
-          g.isInstanceOf[graft.functions.RollingBlockQuantile])
+      df.queryExecution.optimizedPlan.collect { case r: graft.plans.Rolling => r }.nonEmpty
     def values(df: org.apache.spark.sql.DataFrame, c: String): Map[Long, Option[Any]] =
       df.select(col("row_index"), col(c)).collect()
         .map(r => r.getLong(0) -> Option(r.get(1)).map(norm)).toMap
@@ -113,12 +110,12 @@ class RollingBlockGenSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.ansi.enabled", "true")
   }
 
-  test("generator path: sparse, gapped and duplicated indexes fail loudly") {
+  test("RollingExec: sparse, gapped and duplicated indexes fail loudly") {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
     def dies(f: => Unit): Unit = {
       val e = intercept[Exception](f)
-      assert(msgs(e).exists(m => m != null && m.contains("dense")), e.getMessage)
+      assert(msgs(e).exists(m => m != null && m.contains(RollingExec.ReindexMsg)), e.getMessage)
     }
     // filtered frame keeps its original (sparse) index
     val sparse = spark.range(100).where(col("id") % 7 =!= 3)
@@ -131,7 +128,7 @@ class RollingBlockGenSpec extends SparkSpec {
     dies(OrderedOps.rollingSum(tailGap, "x", 3, "rs", blockSize = 10L).collect())
     // duplicate index arranged so the block max STILL aligns (the
     // ADVICE r18 #1 residual class): id 17 replaced by a second 18 —
-    // caught by the generator's per-row contiguity check
+    // caught by the operator's per-row contiguity check
     val dup = spark.range(30)
       .select(when(col("id") === 17, lit(18L)).otherwise(col("id")).as("row_index"),
         col("id").cast("double").as("x"))

@@ -4,12 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.OrderedOps
 
-/** Pins the rolling median/quantile generator
-  * ([[graft.functions.RollingBlockQuantile]]) bit-identical to the
-  * Column (higher-order-function) formulation the operators were first
+/** Pins the rolling median/quantile kernels
+  * ([[graft.operators.RollingExec]]) bit-identical to the Column
+  * (higher-order-function) formulation the operators were first
   * written in, kept verbatim below and applied to the
   * [[OrderedOps.rollingArray]] window — so oracle parity of the
-  * original formulation carries over to the generator. */
+  * original formulation carries over to the operator. */
 class RollingKernelsSpec extends SparkSpec {
 
   /** 600 rows over 7 splits: null values, NaN, negatives, duplicates
@@ -74,7 +74,7 @@ class RollingKernelsSpec extends SparkSpec {
   }
 
   test("kernel handles empty and all-null windows as null") {
-    // an all-null window gathers no values: the generator's empty case
+    // an all-null window gathers no values: the kernel's empty case
     val allNull = hostile.where(col("row_index") >= 304 && col("row_index") < 310)
       .select(col("row_index")).collect().map(_.getLong(0)).toSet
     for (out <- Seq(OrderedOps.rollingMedian(hostile, "v", 3, "r", blockSize = 7L),

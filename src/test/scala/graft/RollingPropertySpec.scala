@@ -8,9 +8,8 @@ import org.scalacheck.rng.Seed
 import graft.operators.OrderedOps
 import graft.operators.OrderedOps.RollSpec
 
-/** Generator-driven checks of the rolling block generators
-  * ([[graft.functions.RollingBlockAgg]] /
-  * [[graft.functions.RollingBlockQuantile]]) against a naive Scala
+/** Generator-driven checks of the streaming rolling operator
+  * ([[graft.operators.RollingExec]]) against a naive Scala
   * sliding window over the collected rows: random frame length,
   * window and block size (plus the fixed layouts window == 1,
   * window == blockSize, an exact-multiple last block and a single
@@ -118,9 +117,9 @@ class RollingPropertySpec extends SparkSpec {
     RollSpec("d", "min", "md"), RollSpec("dec", "max", "mdec"),
     RollSpec("iv", "min", "mi"), RollSpec("iv", "max", "xi"))
 
-  private def sumType(dt: DataType, w: Int): DataType = dt match {
-    case d: DecimalType =>
-      DecimalType(math.min(d.precision + 10 + (if (w > 1) 1 else 0), 38), d.scale)
+  /** Spark's Sum result type, the same at every window. */
+  private def sumType(dt: DataType): DataType = dt match {
+    case d: DecimalType => DecimalType(math.min(d.precision + 10, 38), d.scale)
     case IntegerType => LongType
     case _ => DoubleType
   }
@@ -134,7 +133,7 @@ class RollingPropertySpec extends SparkSpec {
       assert(out.columns.toSeq === schema.fieldNames.toSeq ++ specs.map(_.as), ctx)
       specs.foreach { s =>
         val want = s.how match {
-          case "sum" => sumType(schema(s.column).dataType, l.window)
+          case "sum" => sumType(schema(s.column).dataType)
           case "count" => LongType
           case _ => schema(s.column).dataType
         }
@@ -175,6 +174,55 @@ class RollingPropertySpec extends SparkSpec {
           assert(bits(g) === bits(naiveQuantile(win, q, midpoint)),
             s"$l seed=$seed col=$c $what row $i window $win")
         }
+      }
+    }
+  }
+
+  /** Naive two-pass population moments of a window's non-null values:
+    * (mean, var) with the mean as a plain left-to-right sum over n. */
+  private def naiveMoments(vals: Seq[Any]): Option[(Double, Double)] = {
+    val xs = vals.filter(_ != null).map {
+      case b: java.math.BigDecimal => b.doubleValue
+      case i: Int => i.toDouble
+      case d: Double => d
+    }
+    if (xs.isEmpty) None else {
+      val mean = xs.sum / xs.size
+      Some((mean, xs.map(x => (x - mean) * (x - mean)).sum / xs.size))
+    }
+  }
+
+  private def close(got: Any, want: Option[Double], what: String): Unit =
+    (got, want) match {
+      case (null, None) => ()
+      case (g: Double, Some(w)) =>
+        assert(g == w || (g.isNaN && w.isNaN) || math.abs(g - w) <= 1e-9 * math.abs(w) + 1e-12,
+          s"$what: $g vs $w")
+      case other => fail(s"$what: $other")
+    }
+
+  test("mean/var/std == naive two-pass window, incl. offset 1e8 across carries") {
+    // the offset column: values 1e8 + [0, 1) with nulls, where the old
+    // Σx²/n − mean² formula was off by ~6 against a variance below 1;
+    // small blocks make most windows straddle a carry
+    val offsetLayouts = Seq(Layout(90, 5, 5), Layout(90, 5, 7), Layout(70, 12, 16))
+    for ((l, seed) <- layouts ++ offsetLayouts.map(_ -> 77L)) {
+      val in = frame(l.n, seed).withColumn("off", when(col("d").isNull, lit(null))
+        .otherwise(lit(1e8) + (col("row_index") * 7919 % 1000).cast("double") / 1000.0))
+      val inRows = in.collect()
+      val cols = Seq("d", "dn", "dec", "iv", "off")
+      val specs3 = cols.flatMap(c => Seq(RollSpec(c, "mean", s"m_$c"),
+        RollSpec(c, "var", s"v_$c"), RollSpec(c, "std", s"s_$c")))
+      val out = OrderedOps.rollingAggMulti(in, specs3, l.window, blockSize = l.blockSize)
+      specs3.foreach(s => assert(out.schema(s.as).dataType === DoubleType))
+      val got = byIndex(out)
+      for (c <- cols) windows(inRows, c, l.window).zipWithIndex.foreach { case (win, i) =>
+        val g = got(i.toLong)
+        val want = naiveMoments(win)
+        val ctx = s"$l seed=$seed $c row $i"
+        close(g.get(g.fieldIndex(s"m_$c")), want.map(_._1), s"$ctx mean")
+        close(g.get(g.fieldIndex(s"v_$c")), want.map(_._2), s"$ctx var")
+        close(g.get(g.fieldIndex(s"s_$c")), want.map(m => math.sqrt(m._2)), s"$ctx std")
       }
     }
   }

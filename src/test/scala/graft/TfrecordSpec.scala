@@ -173,8 +173,7 @@ class TfrecordSpec extends SparkSpec {
     val n = try {
       val c = Readers.open(spark, s"$dir/part-*.tfrecord")
         .agg(sum("id"), count(lit(1))).collect().head
-      ListenerDrain.drained(() => stageTasks.size.toLong, windowMs = 100,
-        maxWaitMs = 10000)
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
       c
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(n.getLong(0) == 299L * 300 / 2 && n.getLong(1) == 300L)
