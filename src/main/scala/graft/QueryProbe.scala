@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Targeted interleaved timing of named SparkEntry queries — the
-  * lightweight sibling of [[WinnowProbe]] for iterating on individual
-  * lanes without the full [[Bench]] battery (rep-major min, noop
-  * sink, one JVM — the r4 measurement protocol).
+/** Targeted interleaved timing of named SparkEntry queries, for
+  * iterating on individual lanes without the full [[Bench]] battery
+  * (rep-major min, noop sink, one JVM — the r4 measurement protocol).
   *
   * Usage: SPARK_GRAFT_CPUS=8 tools/run.sh graft.QueryProbe <sfDir> <reps> q1 q2 ...
   */

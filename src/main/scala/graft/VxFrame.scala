@@ -1018,8 +1018,8 @@ final case class VxFrame(
 
   /** Shift a column by `periods` in row_index order (reference:
     * core/dataframe.py:4781 shift). Requires a DENSE `row_index`
-    * column (Tables.withRowIndex). Lowered to the block-partitioned
-    * two-pass operator — no global single-reducer window
+    * column (Tables.withRowIndex). Lowered to one block-partitioned
+    * streaming pass — no global single-reducer window
     * (graft.operators.OrderedOps). */
   def shift(column: String, periods: Int, rowIndex: String = "row_index",
             fill: Option[Any] = None, trim: Boolean = false): VxFrame =

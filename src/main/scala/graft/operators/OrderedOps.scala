@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, IsNotNull, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.DataType
 
 import graft.plans.{Rolling, RollingSpec, RollingStrategy}
 
@@ -15,64 +18,40 @@ import graft.plans.{Rolling, RollingSpec, RollingStrategy}
   * task — fine on 60k rows, fatal at 100 TB. Instead we re-express the
   * reference's chunk-stream realignment (reference:
   * packages/vaex-core/vaex/shift.py:204-340 — shift is "re-align chunk
-  * streams and carry the boundary rows") in Spark terms:
+  * streams and carry the boundary rows") in Spark terms: rows are
+  * bucketed into ordered blocks (`row_index div blockSize`), each block
+  * takes its neighbour's window − 1 boundary rows as carries, and one
+  * streaming pass per block computes every row's window.
   *
-  *   1. bucket rows into ordered blocks (`row_index div blockSize`);
-  *   2. compute the operator *within* each block with a partitioned
-  *      window (parallel, one hash exchange on the block id);
-  *   3. fix up the first/last `p` rows of each block by joining back
-  *      only the boundary rows of the neighbouring block (p rows per
-  *      block).
+  * shift, diff, rollingArray and every rolling statistic build that
+  * plan as one [[graft.plans.Rolling]] node — one hash exchange on the
+  * block id, one local sort, one ring-buffer pass ([[RollingExec]]) —
+  * whose specs are the statistics, a `lag` (shift) or an `array`
+  * (rollingArray). Lead shifts and left-edge arrays set the node's
+  * `descending` direction, which makes them trailing windows of the
+  * reversed stream. Chained calls with the same row index, block size,
+  * validation and direction collapse into one node
+  * ([[graft.plans.CollapseRolling]]).
   *
-  * shift, rollingArray and cumsum run exactly that plan. The rolling
-  * statistics run the same decomposition as one physical operator
-  * instead: a [[graft.plans.Rolling]] node, planned as one hash exchange
-  * on the block id, one local sort, and one streaming pass that takes
-  * the previous block's window−1 boundary rows as carries
-  * ([[RollingExec]]).
-  *
-  * Carry-side join strategy: the carry has `p` (or `window-1`) rows per
-  * block, so its total size is `p · nBlocks` — tiny at w=3, but ~1e10
-  * rows at w=1e4 on 1e12 rows. A `broadcast()` hint there would OOM the
-  * driver, so the hint is applied only when the per-block carry is
-  * provably small ([[SmallCarryRowsPerBlock]]); beyond that the join
-  * stays keyed on (`__blk`,`__pos`)/`rowIndex` and Spark plans a shuffle
-  * join (AQE still broadcast-converts at runtime when the actual carry
-  * is small). With the default block size the carry is additionally kept
-  * under ~1.6 % of the input by scaling blocks with the window.
+  * Column contract, shared by the whole family: the input columns in
+  * input order (`rowIndex` is never moved), then the new outputs in
+  * spec order; an output whose name is already an input column
+  * replaces that column in place, and an output named like `rowIndex`
+  * is rejected.
   *
   * Requirements: `rowIndex` must be a DENSE 0-based index (what
   * [[graft.sources.Tables.withRowIndex]] produces) so that block `b`
-  * holds exactly `blockSize` rows (except the last). This is VALIDATED
-  * in-plan (`validate = true`, default) at O(boundary) cost, not
-  * O(rows): interior rows short-circuit on two integer comparisons;
-  * the real checks run on at most p+1 rows per block — (a) block
-  * contiguity on the block's LAST row only (its max index must sit
-  * exactly count−1 above the block start, which any gap or shift
-  * below it breaks), and (b) carry provenance: each received carry
-  * must come from exactly `rowIndex ∓ p`, which also pins tail-aligned
-  * gaps in the sending block (the max doesn't move, but the carried
-  * absolute indices do). A filtered/sparse index raises a clear
-  * re-index error instead of returning silently wrong results.
-  * (Residual undetectable case: a gap that is an exact union of
-  * whole blocks in the lead/negative-periods direction — it requires
-  * an index someone constructed by hand rather than a filtered frame.
-  * Duplicate index values arranged so the block max still matches —
-  * formerly a second residual class — are now detected: shift
-  * collapses carries per (__blk,__pos) and raises on a duplicate
-  * count (r19, ADVICE r18 #1), and [[RollingExec]] validates per-row
-  * block contiguity.)
+  * holds exactly `blockSize` rows (except the last). With
+  * `validate = true` (default) the node checks it per row, in both
+  * directions, in the same pass ([[RollingExec]]): a filtered, sparse
+  * or duplicated index raises [[RollingExec.ReindexMsg]] instead of
+  * returning silently wrong results.
+  *
+  * cumsum is the exception: a two-phase prefix scan over a MONOTONE
+  * (not necessarily dense) index, with its own plan.
   */
 object OrderedOps {
   val DefaultBlockSize: Long = 1L << 20
-
-  /** Broadcast-hint limit for the per-block carry width: at or below
-    * this the carry is at most ~256·nBlocks tiny rows and the hint is
-    * safe; above it the decision is left to AQE's runtime size check. */
-  val SmallCarryRowsPerBlock: Int = 256
-
-  private def hinted(carry: DataFrame, rowsPerBlock: Int): DataFrame =
-    if (rowsPerBlock <= SmallCarryRowsPerBlock) broadcast(carry) else carry
 
   /** Callers that tune blockSize keep it; the default scales with the
     * carry width so carried rows stay <= ~1/64 of the input. */
@@ -80,55 +59,47 @@ object OrderedOps {
     if (blockSize == DefaultBlockSize) math.max(blockSize, carryRows.toLong * 64L)
     else blockSize
 
-  private def reindexError(op: String): Column =
-    raise_error(lit(s"OrderedOps.$op: row_index is not a dense 0-based index " +
-      "(filtered or sparse frame) — re-index (extract()) before ordered ops"))
+  /** Column `c` of `df` as an attribute of its logical plan. */
+  private def attr(df: DataFrame, c: String): Expression =
+    Bridge.logicalPlan(df).output(df.schema.fieldIndex(c))
 
-  /** Block ordinal of a row by index arithmetic — MUST stay the same
-    * divide-cast form as [[staged]]'s `__blk` so arithmetic boundary
-    * branches join the staged main branch on identical block ids. */
-  private def blkOf(rowIndex: String, bs: Long): Column =
-    (col(rowIndex) / lit(bs)).cast("long")
-
-  /** 0-based position of a row inside its block, by index arithmetic
-    * (valid for dense indexes; sparse ones fail the staged guards). */
-  private def posIn(rowIndex: String, bs: Long): Column =
-    col(rowIndex) - blkOf(rowIndex, bs) * lit(bs)
-
-  private def staged(df: DataFrame, rowIndex: String, blockSize: Long): DataFrame = {
-    val asc = Window.partitionBy(col("__blk")).orderBy(col(rowIndex).asc)
-    // __rnd (position from the block end) = blockCount - __rn + 1: the
-    // unordered count window rides the SAME (blk, rowIndex asc) sort as
-    // the asc window — a desc row_number window cost a second full sort
-    // per staged pass (r18 opt session 2; identical for any input,
-    // row_number and count both see the actual rows)
-    df.withColumn("__blk", (col(rowIndex) / lit(blockSize)).cast("long"))
-      .withColumn("__rn", row_number().over(asc))
-      .withColumn("__rnd",
-        (count(lit(1)).over(Window.partitionBy(col("__blk"))) -
-          col("__rn") + 1).cast("int"))
+  /** `specs` over `df`'s columns as one [[graft.plans.Rolling]] node
+    * under the column contract. `present`, when given, is a spec that is
+    * null exactly on the rows to drop; the same node computes it, and it
+    * is not output. */
+  private def rolling(df: DataFrame, specs: Seq[RollingSpec], rowIndex: String,
+                      blockSize: Long, validate: Boolean, descending: Boolean,
+                      present: Option[RollingSpec] = None): DataFrame = {
+    require(!specs.exists(_.name == rowIndex),
+      s"OrderedOps: an output must not replace the row index '$rowIndex'")
+    val window = specs.map(_.window).max
+    val bs = effectiveBlockSize(blockSize, window - 1)
+    require(bs >= window - 1, s"blockSize=$bs must be >= window-1=${window - 1}")
+    val child = Bridge.logicalPlan(df)
+    val node = Rolling(specs ++ present, attr(df, rowIndex), bs, validate, descending, child)
+    val kept = present.fold[LogicalPlan](node)(p => Filter(IsNotNull(p.toAttribute), node))
+    val outs = specs.map(_.toAttribute)
+    val replacing = outs.filter(o => df.columns.contains(o.name))
+    val plan = if (replacing.isEmpty && present.isEmpty) node else Project(
+      child.output.map(a => replacing.find(_.name == a.name).getOrElse(a)) ++
+        outs.filterNot(replacing.contains), kept)
+    Bridge.ensureStrategy(df.sparkSession, RollingStrategy)
+    Bridge.ofRows(df.sparkSession, plan)
   }
 
-  /** Block contiguity, checked on the LAST row of each block only
-    * (`__rnd === 1`, where `__rn` equals the block's row count): the
-    * block's max index must sit exactly `count − 1` above the block
-    * start, which fails if ANY index below it in the block is missing
-    * or shifted. Gaps aligned to a block's tail don't move the max —
-    * those are pinned by the receivers' carry-provenance checks in the
-    * next block (a partial sender block sends carries from the wrong
-    * absolute indices). One arithmetic check per BLOCK, not per row —
-    * the difference measured ~13-15% of shift's wall time at 20M rows. */
-  private def lastRowAligned(rowIndex: String, blockSize: Long): Column =
-    col(rowIndex) === col("__blk") * lit(blockSize) + col("__rn") - 1
+  /** `v` as a Catalyst value of type `dt`, for a spec's `fill`. */
+  private def fillOf(v: Option[Any], dt: DataType): Any = v.map(x =>
+    Cast(Literal(x), dt, Option(SQLConf.get.sessionLocalTimeZone)).eval()).orNull
 
   /** Shifted value of `column` by `periods` (positive = lag, negative =
     * lead) in `rowIndex` order; out-of-range rows become null, or
     * `fill` when given, and `trim = true` drops them instead
     * (reference: core/dataframe.py:4781 shift(periods, fill_value,
-    * trim)). `fill`/`trim` distinguish a genuinely-null SOURCE value
-    * (which stays null / survives trim) from a missing source ROW via
-    * a shifted never-null marker riding the same window and carry —
-    * no second pass. */
+    * trim)). One `lag` spec over |periods| + 1 rows, descending for a
+    * lead. `fill`/`trim` act on a missing source ROW, never on a null
+    * source VALUE: the node reports the missing row itself (the lag
+    * has fewer rows behind it than it needs), and `trim` filters on a
+    * lag of the row index computed by the same node. */
   def shift(df: DataFrame, column: String, periods: Int,
             rowIndex: String = "row_index", as: Option[String] = None,
             blockSize: Long = DefaultBlockSize,
@@ -136,118 +107,12 @@ object OrderedOps {
             fill: Option[Any] = None, trim: Boolean = false): DataFrame = {
     val out = as.getOrElse(column)
     if (periods == 0) return df.withColumn(out, col(column))
-    val p = math.abs(periods)
-    val bs = effectiveBlockSize(blockSize, p)
-    require(bs >= p, s"blockSize=$bs must be >= |periods|=$p")
-    val asc = Window.partitionBy(col("__blk")).orderBy(col(rowIndex).asc)
-    val needMarker = fill.isDefined || trim
-    val st0 = staged(df, rowIndex, bs).withColumn("__intra",
-      if (periods > 0) lag(col(column), p).over(asc) else lead(col(column), p).over(asc))
-    val st = if (!needMarker) st0 else st0.withColumn("__intraIdx",
-      if (periods > 0) lag(col(rowIndex), p).over(asc) else lead(col(rowIndex), p).over(asc))
-    // receiving position within the neighbour block, and which boundary
-    // rows of THIS block are carried to it:
-    //   lag : last p rows of block b feed rows __rn = p-__rnd+1 of b+1
-    //   lead: first p rows of block b feed rows __rnd = p-__rn+1 of b-1
-    // The carry branch is an arithmetic projection of the RAW frame
-    // (rowIndex % bs), not a filter over the staged windows, so only
-    // the main branch pays the block-window chain and the boundary
-    // filter pushes into the scan. On a dense index the selected rows
-    // are identical (pos-from-end bs - idx%bs == __rnd on full blocks);
-    // sparse indexes still fail the receiver-side provenance guard
-    // (__cidx must equal rowIndex -/+ p exactly).
-    val pos = posIn(rowIndex, bs); val blk = blkOf(rowIndex, bs)
-    val recvPos = if (periods > 0) col("__rn") else col("__rnd")
-    val carries0 = (
-      if (periods > 0)
-        df.where(pos >= lit(bs) - p)
-          .select((blk + 1L).as("__blk"),
-            (lit(p + 1) - (lit(bs) - pos)).cast("int").as("__pos"),
-            col(column).as("__carry"), col(rowIndex).as("__cidx"))
-      else
-        df.where(pos <= p - 1)
-          .select((blk - 1L).as("__blk"),
-            (lit(p + 1) - (pos + 1)).cast("int").as("__pos"),
-            col(column).as("__carry"), col(rowIndex).as("__cidx"))
-      ).where(col("__blk") >= 0)
-    // r19 (ADVICE r18 #1): under validate, collapse carries per
-    // (__blk,__pos) and count them — a DUPLICATED index value in the
-    // carry region (arranged so the block max still aligns) used to
-    // emit two carries at the same key, silently DUPLICATING the
-    // receiver row through the join with both copies passing the
-    // __cidx===srcIdx check. Now the join can never multiply rows and
-    // __cdup>1 raises through the guard. The aggregate rides the same
-    // (__blk,__pos)-keyed exchange the join pays; `first` is
-    // deterministic whenever the query doesn't raise (__cdup==1).
-    val carries = if (!validate) carries0
-      else carries0.groupBy(col("__blk"), col("__pos")).agg(
-        first(col("__carry")).as("__carry"),
-        first(col("__cidx")).as("__cidx"),
-        count(lit(1)).as("__cdup"))
-    // Lead-direction validation needs the frame's max index: a missing
-    // carry is legitimate ONLY past the end (srcIdx > max) — without
-    // the bound, a wholly-absent middle block (sparse frame) yields
-    // null carries that look like the legitimate tail. One
-    // column-pruned max() scan, broadcast as a 1-row literal; lag
-    // needs no bound (its legit-missing rows are rowIndex < p).
-    val needMax = validate && periods < 0
-    val joined0 = st.withColumn("__pos", recvPos)
-      .join(hinted(carries, p), Seq("__blk", "__pos"), "left")
-    val joined = if (!needMax) joined0 else joined0.crossJoin(
-      broadcast(df.groupBy().agg(max(col(rowIndex)).as("__maxIdx"))))
-    val value = coalesce(col("__intra"), col("__carry"))
-    val srcIdx = if (periods > 0) col(rowIndex) - p else col(rowIndex) + p
-    val guarded = if (!validate) value else {
-      // O(boundary) guard: interior rows short-circuit on 1-2 integer
-      // comparisons; the real checks run on ≤ p+1 rows per block. A
-      // received carry must come from exactly rowIndex -/+ p; in the
-      // lag direction a non-first block must ALWAYS receive its carry
-      // (predecessor blocks are full on a dense index); in the lead
-      // direction a missing carry is only legitimate past the frame
-      // end; the last row of every block re-derives the whole block's
-      // contiguity ([[lastRowAligned]]).
-      val noDup = coalesce(col("__cdup"), lit(1L)) === 1L
-      val carryOk = noDup && (
-        if (periods > 0)
-          col("__blk") === 0L || (col("__cidx").isNotNull && col("__cidx") === srcIdx)
-        else (col("__cidx").isNull && srcIdx > col("__maxIdx")) ||
-          col("__cidx") === srcIdx)
-      val ok = (recvPos > p || carryOk) &&
-        (col("__rnd") > 1 || lastRowAligned(rowIndex, bs))
-      when(recvPos > p && col("__rnd") > 1, value)
-        .otherwise(when(ok, value).otherwise(reindexError("shift")))
-    }
-    if (!needMarker)
-      joined.withColumn(out, guarded)
-        .drop("__blk", "__rn", "__rnd", "__pos", "__intra", "__carry", "__cidx",
-          "__cdup", "__maxIdx")
-    else {
-      // source-row existence: the shifted index marker (never null in
-      // a dense frame) survives intra-block or arrives with the carry.
-      // Under validate, a missing source row is acceptable ONLY at the
-      // genuine boundary (before index p for lag, past max for lead);
-      // anywhere else it's a sparse index and must raise exactly like
-      // the plain path — fill/trim must not suppress the guard.
-      val srcExists = coalesce(col("__intraIdx"), col("__cidx")).isNotNull
-      val legitMissing =
-        if (periods > 0) col(rowIndex) < p else srcIdx > col("__maxIdx")
-      val filled = fill match {
-        case Some(v) =>
-          val fb = lit(v).cast(df.schema(column).dataType)
-          if (validate) when(srcExists, guarded)
-            .otherwise(when(legitMissing, fb).otherwise(reindexError("shift")))
-          else when(srcExists, guarded).otherwise(fb)
-        case None => guarded
-      }
-      val res = joined.withColumn(out, filled)
-      val kept =
-        if (!trim) res
-        else if (validate) res.where(srcExists ||
-          when(legitMissing, lit(false)).otherwise(reindexError("shift").isNotNull))
-        else res.where(srcExists)
-      kept.drop("__blk", "__rn", "__rnd", "__pos", "__intra", "__carry", "__cidx",
-          "__cdup", "__intraIdx", "__maxIdx")
-    }
+    val w = math.abs(periods) + 1
+    val fillValue = fillOf(fill, df.schema(column).dataType)
+    rolling(df, Seq(RollingSpec(attr(df, column), "lag", w, 0.5, fillValue, out)()),
+      rowIndex, blockSize, validate, descending = periods < 0,
+      present = if (!trim) None
+        else Some(RollingSpec(attr(df, rowIndex), "lag", w, 0.5, null, "__present")()))
   }
 
   /** diff = x - shift(x, periods) (reference: core/dataframe.py:4749). */
@@ -278,14 +143,8 @@ object OrderedOps {
 
   /** N trailing rolling statistics (sum, count, min, max, mean, var,
     * std, median, quantile) as one [[graft.plans.Rolling]] node, run as
-    * one streaming pass ([[RollingExec]]); chained calls with the same
-    * rowIndex, block size and validation collapse into one node
-    * ([[graft.plans.CollapseRolling]]).
-    *
-    * Column contract, shared by the whole ordered family: the input
-    * columns in input order (`rowIndex` is never moved), then the new
-    * outputs in spec order; an output whose name is already an input
-    * column replaces that column in place. */
+    * one streaming pass ([[RollingExec]]), under the family's column
+    * contract. */
   def rollingAggMulti(df: DataFrame, specs: Seq[RollSpec], window: Int,
                       rowIndex: String = "row_index",
                       blockSize: Long = DefaultBlockSize,
@@ -294,27 +153,17 @@ object OrderedOps {
     require(specs.nonEmpty, "rollingAggMulti: no specs")
     require(specs.map(_.as).distinct.size == specs.size,
       "rollingAggMulti: duplicate output names")
-    require(!specs.exists(_.as == rowIndex),
-      s"rollingAggMulti: an output must not replace the row index '$rowIndex'")
-    specs.find(s => !RollingSpec.Hows(s.how)).foreach(s =>
+    specs.find(s => !RollingStats(s.how)).foreach(s =>
       throw new IllegalArgumentException(s"unknown rolling agg: ${s.how}"))
-    val bs = effectiveBlockSize(blockSize, window - 1)
-    require(bs >= window, s"blockSize=$bs must be >= window=$window")
-    val child = Bridge.logicalPlan(df)
-    def attr(c: String) = child.output(df.schema.fieldIndex(c))
-    val rolled = specs.map { s =>
-      if (!Set("count", "min", "max")(s.how)) requireNumeric(df, s.column, s"rolling ${s.how}")
-      RollingSpec(attr(s.column), s.how, window, s.q, s.as)()
-    }
-    val node = Rolling(rolled, attr(rowIndex), bs, validate, child)
-    val outs = rolled.map(_.toAttribute)
-    val replacing = outs.filter(o => df.columns.contains(o.name))
-    val plan = if (replacing.isEmpty) node else Project(
-      child.output.map(a => replacing.find(_.name == a.name).getOrElse(a)) ++
-        outs.filterNot(replacing.contains), node)
-    Bridge.ensureStrategy(df.sparkSession, RollingStrategy)
-    Bridge.ofRows(df.sparkSession, plan)
+    specs.foreach(s =>
+      if (!Set("count", "min", "max")(s.how)) requireNumeric(df, s.column, s"rolling ${s.how}"))
+    rolling(df, specs.map(s => RollingSpec(attr(df, s.column), s.how, window, s.q, null, s.as)()),
+      rowIndex, blockSize, validate, descending = false)
   }
+
+  /** The statistics [[rollingAggMulti]] takes; lag and array are
+    * [[shift]] and [[rollingArray]]. */
+  private val RollingStats: Set[String] = RollingSpec.Hows -- Set("lag", "array")
 
   def rollingSum(df: DataFrame, column: String, window: Int, as: String,
                  rowIndex: String = "row_index",
@@ -345,13 +194,12 @@ object OrderedOps {
   /** Sliding-window ARRAY — the reference's `rolling(...).array`
     * accessor (core/rolling.py:4-31: `edge="right"` exposes, for each
     * row, the raw window [i−window+1, i] as a fixed-length vector with
-    * `fill_value` in the out-of-range head slots; here fill_value is
-    * null). Same block decomposition as [[shift]], but the
-    * carried/intra values ride inside (index, value) structs: structs
-    * are never null, so null VALUES survive `collect_list` (which
-    * drops bare null elements), and the index field makes the window
-    * order explicit — one `sort_array` on the merged list instead of
-    * trusting collection order across the carry join. */
+    * `fill_value` in the out-of-range head slots; `edge="left"` the
+    * window [i, i+window−1] with the fill in the tail slots). One
+    * `array` spec; the left edge runs descending, so its window trails
+    * the reversed stream, and is reversed back into index order. Null
+    * values stay null elements; the fill (null by default) only takes
+    * the slots of rows that do not exist. */
   def rollingArray(df: DataFrame, column: String, window: Int, as: String,
                    rowIndex: String = "row_index",
                    blockSize: Long = DefaultBlockSize,
@@ -361,90 +209,9 @@ object OrderedOps {
     require(window >= 1, "window must be >= 1")
     require(edge == "right" || edge == "left",
       s"""edge must be "right" or "left", not "$edge"""")
-    val right = edge == "right"
-    val bs = effectiveBlockSize(blockSize, window - 1)
-    require(bs >= window, s"blockSize=$bs must be >= window=$window")
-    val valueType = df.schema(column).dataType
-    val fillCol = fillValue.map(v => lit(v).cast(valueType))
-      .getOrElse(lit(null).cast(valueType))
-    val item = struct(col(rowIndex).as("i"), col(column).as("v"))
-    val asc = Window.partitionBy(col("__blk")).orderBy(col(rowIndex).asc)
-    val frame = if (right) asc.rowsBetween(-(window - 1), 0)
-      else asc.rowsBetween(0, window - 1)
-    val st = staged(df, rowIndex, bs).withColumn("__intra",
-      collect_list(item).over(frame))
-    def finish(merged: Column): Column = {
-      val values = transform(sort_array(merged), e => e.getField("v"))
-      // fixed length `window`: pad the partial windows at the global
-      // head (edge right) / tail (edge left) with fill_value slots
-      // (reference: core/rolling.py:14-21 edge + fill_value)
-      val pad = array_repeat(fillCol, lit(window) - size(values))
-      if (right) concat(pad, values) else concat(values, pad)
-    }
-    if (window == 1) {
-      val v = if (!validate) finish(col("__intra"))
-      else when(col("__rnd") > 1, finish(col("__intra")))
-        .otherwise(when(lastRowAligned(rowIndex, bs), finish(col("__intra")))
-          .otherwise(reindexError("rollingArray")))
-      return st.withColumn(as, v).drop("__blk", "__rn", "__rnd", "__intra")
-    }
-    // boundary carry, mirrored by edge: RIGHT — the last window−1 rows
-    // of block b complete the first rows of b+1; LEFT — the first
-    // window−1 rows of block b complete the last rows of b−1.
-    // Both boundary branches are arithmetic projections of the RAW
-    // frame (same rationale and dense-index equivalence argument as
-    // [[shift]]; a short LAST block has no successor, so its
-    // tail neither sends (right) nor receives (left) — matching the
-    // window-based selection on a dense index, and sparse indexes
-    // still fail the main branch's contiguity/provenance guards).
-    val pos = posIn(rowIndex, bs); val blk = blkOf(rowIndex, bs)
-    val carries =
-      if (right) df.where(pos >= lit(bs) - (window - 1))
-        .select((blk + 1L).as("__blk"), (lit(bs) - pos).cast("int").as("__k"),
-          item.as("__citem"), col(rowIndex).as("__cidx"))
-      else df.where(pos <= window - 2)
-        .select((blk - 1L).as("__blk"), (pos + 1).cast("int").as("__k"),
-          item.as("__citem"), col(rowIndex).as("__cidx"))
-        .where(col("__blk") >= 0)
-    val recvPos = if (right) col("__rn") else col("__rnd")
-    // __recv = the receiver's position in the carry direction (__rn on
-    // the right edge, __rnd on the left), arithmetic like the carries
-    val recvSel =
-      if (right) df.where(pos <= window - 2)
-        .select(blk.as("__blk"), (pos + 1).cast("int").as("__recv"), col(rowIndex))
-      else df.where(pos >= lit(bs) - (window - 1))
-        .select(blk.as("__blk"), (lit(bs) - pos).cast("int").as("__recv"),
-          col(rowIndex))
-    val extra = recvSel
-      .join(hinted(carries, window - 1), Seq("__blk"), "left")
-      .where(col("__k") <= lit(window) - col("__recv"))
-      .groupBy(col(rowIndex)).agg(collect_list(col("__citem")).as("__cext"),
-        count(lit(1)).as("__cn"), min(col("__cidx")).as("__cmin"))
-    val joined = st.join(hinted(extra, window - 1), Seq(rowIndex), "left")
-    val value = finish(when(col("__cext").isNotNull,
-      concat(col("__cext"), col("__intra"))).otherwise(col("__intra")))
-    val guarded = if (!validate) value else {
-      // same O(boundary) guard scheme as shift's, mirrored by direction.
-      // RIGHT: predecessors of a non-first block are full on a dense
-      // index, so receivers demand the exact contiguous range
-      // [rowIndex−window+1, blockStart−1]. LEFT: the successor block
-      // may be the (possibly short or absent) global tail, so the
-      // check is lenient on count and pins provenance instead — any
-      // received carry must start exactly at the next block's first
-      // index (rowIndex + position offset).
-      val carryOk =
-        if (right) col("__blk") === 0L ||
-          (coalesce(col("__cn"), lit(0L)) === lit(window).cast("long") - col("__rn") &&
-            col("__cmin") === col(rowIndex) - (window - 1))
-        else col("__cn").isNull ||
-          col("__cmin") === (col("__blk") + 1L) * bs
-      val ok = (recvPos > window - 1 || carryOk) &&
-        (col("__rnd") > 1 || lastRowAligned(rowIndex, bs))
-      when(recvPos > window - 1 && col("__rnd") > 1, value)
-        .otherwise(when(ok, value).otherwise(reindexError("rollingArray")))
-    }
-    joined.withColumn(as, guarded)
-      .drop("__blk", "__rn", "__rnd", "__intra", "__cext", "__cn", "__cmin")
+    val fill = fillOf(fillValue, df.schema(column).dataType)
+    rolling(df, Seq(RollingSpec(attr(df, column), "array", window, 0.5, fill, as)()),
+      rowIndex, blockSize, validate, descending = edge == "left")
   }
 
   /** Cumulative (prefix) sum of `column` in `rowIndex` order — the
@@ -485,8 +252,9 @@ object OrderedOps {
     * (quantile_cont 0.5) over the window's non-null values, null for
     * an all-null window — matching DuckDB/NumPy median semantics.
     * Median is not decomposable into carried partial aggregates, so
-    * each row's window is gathered and sorted (O(window) per row, exact,
-    * still block-partitioned: no global window). */
+    * the operator keeps each window's values sorted as it slides
+    * (O(window) per row, exact, still block-partitioned: no global
+    * window). */
   def rollingMedian(df: DataFrame, column: String, window: Int, as: String,
                     rowIndex: String = "row_index",
                     blockSize: Long = DefaultBlockSize): DataFrame = {
@@ -509,7 +277,7 @@ object OrderedOps {
     * the sorted non-null window values, interpolated between the two
     * bracketing elements. Generalizes [[rollingMedian]] (which keeps
     * the (a+b)/2 midpoint formula for bit-parity with SQL MEDIAN).
-    * O(window·log window) per row, no global window. */
+    * O(window) per row, no global window. */
   def rollingQuantile(df: DataFrame, column: String, window: Int, q: Double,
                       as: String, rowIndex: String = "row_index",
                       blockSize: Long = DefaultBlockSize): DataFrame = {

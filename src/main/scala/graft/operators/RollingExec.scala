@@ -6,7 +6,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
-import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -17,15 +17,18 @@ import graft.plans.RollingSpec
 /** The streaming physical operator behind [[graft.plans.Rolling]].
   *
   * Its child is the framed input of [[graft.plans.RollingStrategy]]:
-  * every row tagged with its block `blk`, plus the previous block's
-  * last max(window) − 1 rows as carry rows. It requires the rows
-  * clustered by `blk` and sorted by (`blk`, rowIndex), so one pass
-  * sees each block's carries first and then its own rows in order; a
-  * partition may hold several blocks (AQE coalescing), and all state
-  * resets at each block change. Per distinct input it keeps a ring of
-  * the last max(window) values — memory is O(window), not O(block) —
-  * and it emits only the block's own rows: the child's columns, then
-  * one column per spec.
+  * every row tagged with its block `blk`, plus max(window) − 1 carry
+  * rows from the neighbouring block. It requires the rows clustered by
+  * `blk` and sorted by `blk`, then rowIndex ascending (or descending
+  * for a `descending` node, whose carries come from the next block),
+  * so one pass sees each block's carries first and then its own rows
+  * in stream order; a partition may hold several blocks (AQE
+  * coalescing), and all state resets at each block change. Per
+  * distinct input it keeps a ring of the last max(window) values —
+  * memory is O(window), not O(block) — and it emits only the block's
+  * own rows: the child's columns, then one column per spec. Windows
+  * trail in stream order, so a descending node computes leading
+  * windows of the index with the same kernels.
   *
   * Statistics, over the non-null values of the trailing window:
   *   - sum: accumulated in window order from the first non-null value,
@@ -42,18 +45,31 @@ import graft.plans.RollingSpec
   *   - median/quantile: [[RollingExec.quantileOfSorted]] over the
   *     window's values as doubles, kept sorted as the window slides
   *     (one removal and one insertion per row instead of a sort).
-  * Every statistic but count is null over an all-null window.
+  * Every statistic but count is null over an all-null window. The value
+  * hows read the ring itself: lag is the value window − 1 rows back in
+  * stream order (`fill` when the stream has fewer rows, so a lag of the
+  * row index is null exactly where the source row is missing); array
+  * is the window oldest first with `fill` in the slots before the
+  * stream's first row, reversed for a descending node so that it reads
+  * in index order.
   *
-  * Validation (`validate`) keeps the dense-index contract per row: the
-  * k-th own row of block b must sit at exactly `b·blockSize + k`, and a
-  * non-first block must receive exactly max(window) − 1 carries at
-  * `b·blockSize − (window−1) … b·blockSize − 1`. Gaps, shifts,
-  * duplicates and short predecessors raise [[RollingExec.ReindexMsg]].
-  * Residual undetectable case: TRAILING whole blocks missing, which is
+  * Validation (`validate`) keeps the dense-index contract per row and
+  * raises [[RollingExec.ReindexMsg]] on any gap, shift or duplicate.
+  * Ascending, the k-th own row of block b must sit at exactly
+  * `b·blockSize + k`, and a non-first block must receive exactly
+  * max(window) − 1 carries at `b·blockSize − (window−1) …
+  * b·blockSize − 1`. Descending, the next block may be the short last
+  * one, so the carries are a contiguous run of at most max(window) − 1
+  * that must end at `(b+1)·blockSize`; a block that received carries
+  * starts its own rows at `(b+1)·blockSize − 1`; own rows step by −1 and
+  * must end at `b·blockSize`; and a block holding carries but no own
+  * rows is a missing block whose successor exists. Residual undetectable
+  * case, both directions: TRAILING whole blocks missing, which is
   * indistinguishable from the end of the data.
   */
 case class RollingExec(specs: Seq[RollingSpec], rowIndex: Expression, blockSize: Long,
-                       validate: Boolean, blk: Attribute, child: SparkPlan)
+                       validate: Boolean, descending: Boolean, blk: Attribute,
+                       child: SparkPlan)
   extends UnaryExecNode {
 
   private def results: Seq[Attribute] = specs.map(_.toAttribute)
@@ -64,7 +80,8 @@ case class RollingExec(specs: Seq[RollingSpec], rowIndex: Expression, blockSize:
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(Seq(blk)) :: Nil
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(Seq(SortOrder(blk, Ascending), SortOrder(rowIndex, Ascending)))
+    Seq(Seq(SortOrder(blk, Ascending),
+      SortOrder(rowIndex, if (descending) Descending else Ascending)))
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
@@ -82,7 +99,7 @@ case class RollingExec(specs: Seq[RollingSpec], rowIndex: Expression, blockSize:
       new RollingExec.Pass(rows, specs, ringOf,
         UnsafeProjection.create(Seq(ri, blk) ++ inputs, childOut),
         UnsafeProjection.create(out, all), inputs.map(_.dataType),
-        blockSize, carry, validate, ansi, numOutputRows)
+        blockSize, carry, validate, descending, ansi, numOutputRows)
     }
   }
 
@@ -117,12 +134,14 @@ object RollingExec {
 
   /** The value a spec reads: doubles for the float statistics, longs for
     * integral sums and min/max (narrowed back on output), the column
-    * itself for decimal sums and other min/max types, and for a count of
-    * any other type a long that is null exactly where the column is. */
+    * itself for lag, array, decimal sums and other min/max types, and for
+    * a count of any other type a long that is null exactly where the
+    * column is. */
   private def inputOf(s: RollingSpec): Expression = {
     val c = s.child
     def as(dt: DataType): Expression = if (c.dataType == dt) c else Cast(c, dt)
     (s.how, c.dataType) match {
+      case ("lag" | "array", _) => c
       case ("sum" | "mean", _: DecimalType) => c
       case (_, ByteType | ShortType | IntegerType | LongType)
           if Set("sum", "mean", "count", "min", "max")(s.how) => as(LongType)
@@ -145,6 +164,10 @@ object RollingExec {
     private var next = 0
 
     def clear(): Unit = { size = 0; next = 0 }
+
+    /** The value in slot `p`, null if it is null. */
+    def value(p: Int): Any =
+      if (nul(p)) null else kind match { case 'D' => d(p); case 'L' => l(p); case _ => o(p) }
 
     def push(row: InternalRow, i: Int): Unit = {
       val isNull = row.isNullAt(i)
@@ -211,6 +234,22 @@ object RollingExec {
       m2 / c
     }
 
+    /** Slot of the value `w − 1` rows back, -1 when fewer than `w`
+      * values were pushed. */
+    def back(w: Int): Int = if (size < w) -1 else first(w)
+
+    /** The last `w` values, oldest first (newest first if `reversed`),
+      * with `fill` in the slots before the first pushed value. */
+    def window(w: Int, fill: Any, reversed: Boolean): Array[Any] = {
+      val out = Array.fill[Any](w)(fill)
+      val n = len(w); var p = first(n); var k = w - n
+      while (k < w) {
+        out(if (reversed) w - 1 - k else k) = value(p)
+        p += 1; if (p == cap) p = 0; k += 1
+      }
+      out
+    }
+
     /** Slot of the value that leaves a full window of `w` on the next
       * push, -1 when the window is not full or that value is null. */
     def leaving(w: Int): Int =
@@ -270,7 +309,8 @@ object RollingExec {
 
   private type Stat = (SpecificInternalRow, Int) => Unit
 
-  private def stat(s: RollingSpec, r: Ring, ansi: Boolean, sorted: SortedWindow): Stat = {
+  private def stat(s: RollingSpec, r: Ring, ansi: Boolean, sorted: SortedWindow,
+                   descending: Boolean): Stat = {
     val w = s.window
     def whenAny(f: (SpecificInternalRow, Int, Long) => Unit): Stat = (o, i) => {
       val c = r.nonNull(w)
@@ -281,6 +321,13 @@ object RollingExec {
       decType.precision, decType.scale, nullOnOverflow = !ansi)
     (s.how, r.kind) match {
       case ("count", _) => (o, i) => o.setLong(i, r.nonNull(w))
+      case ("lag", _) => (o, i) => {
+        val p = r.back(w)
+        val v = if (p < 0) s.fill else r.value(p)
+        if (v == null) o.setNullAt(i) else o.update(i, v)
+      }
+      case ("array", _) => (o, i) =>
+        o.update(i, new GenericArrayData(r.window(w, s.fill, descending)))
       case ("sum", 'D') => whenAny((o, i, _) => o.setDouble(i, r.sumD(w)))
       case ("sum", 'L') => whenAny((o, i, _) => o.setLong(i, r.sumL(w, ansi)))
       case ("sum", _) => whenAny((o, i, _) => o.update(i, decSum()))
@@ -318,23 +365,27 @@ object RollingExec {
   private final class Pass(rows: Iterator[InternalRow], specs: Seq[RollingSpec],
                            ringOf: Array[Int], inProj: UnsafeProjection,
                            outProj: UnsafeProjection, inputTypes: Seq[DataType],
-                           bs: Long, carry: Int, validate: Boolean, ansi: Boolean,
-                           numOutputRows: SQLMetric) extends Iterator[InternalRow] {
+                           bs: Long, carry: Int, validate: Boolean, descending: Boolean,
+                           ansi: Boolean, numOutputRows: SQLMetric)
+    extends Iterator[InternalRow] {
     private val rings = inputTypes.map(t => new Ring(carry + 1, t)).toArray
     private val sorted = specs.map(s =>
       if (s.how == "median" || s.how == "quantile") new SortedWindow(s.window) else null).toArray
     private val stats = specs.indices.map(k =>
-      stat(specs(k), rings(ringOf(k)), ansi, sorted(k))).toArray
+      stat(specs(k), rings(ringOf(k)), ansi, sorted(k), descending)).toArray
     private val result = new SpecificInternalRow(specs.map(_.dataType))
     private val joined = new JoinedRow
     private var started = false
     private var block = 0L
     private var own = 0L
     private var carries = 0
+    private var last = 0L
+    private var closed = false
     private var pending: InternalRow = null
 
     override def hasNext: Boolean = {
       while (pending == null && rows.hasNext) pending = step(rows.next())
+      if (pending == null && !closed) { closed = true; endBlock() }
       pending != null
     }
 
@@ -352,6 +403,7 @@ object RollingExec {
       val ri = in.getLong(0)
       val b = in.getLong(1)
       if (!started || b != block) {
+        endBlock()
         started = true; block = b; own = 0L; carries = 0
         rings.foreach(_.clear())
         sorted.foreach(w => if (w != null) w.clear())
@@ -363,13 +415,13 @@ object RollingExec {
       }
       k = 0
       while (k < rings.length) { rings(k).push(in, k + 2); k += 1 }
-      if (!noIndex && ri / bs != b) {
-        if (validate && (b <= 0 || own > 0 || carries >= carry ||
-            ri != b * bs - carry + carries)) die()
+      val isCarry = !noIndex && ri / bs != b
+      if (validate && !dense(ri, isCarry)) die()
+      last = ri
+      if (isCarry) {
         carries += 1
         null
       } else {
-        if (validate && ((own == 0 && b > 0 && carries != carry) || ri != b * bs + own)) die()
         own += 1
         k = 0
         while (k < stats.length) { stats(k)(result, k); k += 1 }
@@ -377,5 +429,26 @@ object RollingExec {
         outProj(joined(row, result))
       }
     }
+
+    /** The dense-index contract at row `ri` of the current block, given
+      * the rows already seen in it (`last` is the previous one). */
+    private def dense(ri: Long, isCarry: Boolean): Boolean = {
+      val start = block * bs
+      if (!descending) {
+        if (isCarry) block > 0 && own == 0 && carries < carry && ri == start - carry + carries
+        else (own > 0 || block == 0 || carries == carry) && ri == start + own
+      } else {
+        val next = start + bs
+        if (isCarry) own == 0 && carries < carry && (carries == 0 || ri == last - 1)
+        else if (own == 0) carries == 0 || (last == next && ri == next - 1)
+        else ri == last - 1
+      }
+    }
+
+    /** Descending, a block ends its own rows at its first index, and a
+      * block with carries but no own rows is missing while its
+      * successor exists. */
+    private def endBlock(): Unit =
+      if (validate && descending && started && (own == 0 || last != block * bs)) die()
   }
 }

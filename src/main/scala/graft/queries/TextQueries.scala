@@ -265,7 +265,7 @@ object TextQueries {
         .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       val freq = toks.groupBy("token").agg(count(lit(1)).as("tf"))
       val totalDf = freq.agg(sum(col("tf")).as("total"))
-      // freq is NOT broadcast-hinted: a 100 TB corpus can carry a
+      // freq gets no broadcast hint: a 100 TB corpus can carry a
       // 1e8-token vocabulary — the join stays keyed on token and AQE
       // broadcast-converts when the actual vocab is small
       toks.join(freq, "token")

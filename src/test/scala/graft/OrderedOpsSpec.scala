@@ -67,12 +67,11 @@ class OrderedOpsSpec extends SparkSpec {
   }
 
   test("exact-multiple block size: last block FULL (arithmetic tail senders fire)") {
-    // 100 = 10 x 10: the last block is full, so its tail rows match the
-    // arithmetic carry-sender selection (posIn >= bs - (w-1)) but have
-    // no receiver — the join must drop them silently, and every other
-    // boundary must still carry (r18 opt session 2 boundary-branch
-    // refactor edge case; with a SHORT last block those senders are
-    // never selected at all)
+    // 100 = 10 x 10: the last block is full, so its tail rows are
+    // framed as carries into a block that has no own rows — the
+    // operator must drop them silently, and every other boundary must
+    // still carry (with a SHORT last block those carries are never
+    // framed at all)
     for (p <- Seq(1, 4, -3)) {
       check(OrderedOps.shift(df, "x", p, as = Some("s"), blockSize = 10L), "s",
         globalShift(p))
@@ -329,24 +328,11 @@ class OrderedOpsSpec extends SparkSpec {
     }
   }
 
-  test("large-window carry is NOT broadcast-hinted (small windows are)") {
-    // with autoBroadcast disabled, a BroadcastExchange can only come
-    // from the explicit hint — present at p=3, absent beyond the
-    // SmallCarryRowsPerBlock guard (the O(window·nBlocks) OOM hazard).
-    // shift is the carry-join operator; the rolling statistics have no
-    // carry join (RollingExec takes carries through its own exchange)
+  test("large-window carry (400 rows) is correct across 600-row blocks") {
+    // the carries of a wide window ride the node's own exchange (no
+    // carry join), so the only thing to pin is correctness
     val d = spark.range(2000)
       .select(col("id").as("row_index"), col("id").cast("double").as("x"))
-    def planOf(p: Int): String =
-      OrderedOps.shift(d, "x", p, as = Some("s"), blockSize = 600L)
-        .queryExecution.executedPlan.toString
-    val conf = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      assert(planOf(3).contains("BroadcastExchange"))
-      assert(!planOf(400).contains("BroadcastExchange"))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", conf)
-    // and the unhinted path is still correct across block boundaries
     val w = 400
     val win = Window.orderBy(col("row_index")).rowsBetween(-(w - 1), 0)
     check(OrderedOps.rollingSum(d, "x", w, "rs", blockSize = 600L), "rs",
@@ -385,8 +371,8 @@ class OrderedOpsSpec extends SparkSpec {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
     // block 1's tail (5..9) missing entirely: fewer than p carries
-    // reach block 2, srcExists=false on its head rows — fill used to
-    // route them to the fill value without ever consulting the guard
+    // reach block 2, whose head rows then lack their source row — fill
+    // must not route them to the fill value without the index check
     val tailGap = spark.range(30).where(col("id") < 5 || col("id") >= 10)
       .select(col("id").as("row_index"), col("id").cast("double").as("x"))
     for (bad <- Seq(
@@ -398,8 +384,8 @@ class OrderedOpsSpec extends SparkSpec {
       assert(msgs(e).exists(m => m != null && m.contains("dense")), e.getMessage)
     }
     // a wholly-absent middle block under lead: receivers' missing
-    // carries look exactly like the legitimate frame tail unless
-    // checked against the true max index
+    // carries look exactly like the legitimate frame tail; the absent
+    // block itself holds the next block's carries but no own rows
     val midGap = spark.range(30).where(col("id") < 10 || col("id") >= 20)
       .select(col("id").as("row_index"), col("id").cast("double").as("x"))
     for (bad <- Seq(
@@ -411,8 +397,7 @@ class OrderedOpsSpec extends SparkSpec {
       assert(msgs(e).exists(m => m != null && m.contains("dense")), e.getMessage)
     }
     // dense frames keep the documented fill/trim semantics under the
-    // same validation (lead needs the max-index bound; boundary rows
-    // past the end legitimately fill)
+    // same validation (boundary rows past the end legitimately fill)
     val lead = OrderedOps.shift(df, "x", -3, as = Some("s"), blockSize = 7L,
       fill = Some(-1.0))
     assert(lead.where(col("row_index") >= 97 && col("s") === -1.0).count() === 3)
@@ -455,11 +440,10 @@ class OrderedOpsSpec extends SparkSpec {
 
   test("shift: duplicated index with aligned block max raises, never duplicates rows") {
     // id 17 replaced by a second 18: block 1 keeps 10 rows and its max
-    // (19) still sits at count-1 above the block start, so the
-    // contiguity check alone cannot see it — but the two identical
-    // carry rows it sends to block 2 collapse to one (__cdup=2) and
-    // the receiver guard raises instead of silently emitting the
-    // receiver row TWICE (the pre-r19 failure mode).
+    // (19) still sits at count-1 above the block start, so a per-block
+    // count or max check cannot see it — the per-row index checks must
+    // raise instead of silently emitting a receiver row TWICE (the
+    // failure mode of a join on the carries).
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
     val dup = spark.range(30)
@@ -475,7 +459,7 @@ class OrderedOpsSpec extends SparkSpec {
         OrderedOps.shift(shifted, "x", p, as = Some("s"), blockSize = 10L).collect())
       assert(msgs(e).exists(m => m != null && m.contains("dense")), s"p=$p: $e")
     }
-    // and validate=false keeps the trusting fast path (no agg, no raise)
+    // and validate=false keeps the trusting path (no raise)
     val trusting = OrderedOps.shift(dup, "x", 2, as = Some("s"), blockSize = 10L,
       validate = false).collect()
     assert(trusting.length >= 30) // duplicated receiver row tolerated by choice

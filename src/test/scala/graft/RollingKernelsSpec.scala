@@ -1,15 +1,17 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.OrderedOps
 
 /** Pins the rolling median/quantile kernels
   * ([[graft.operators.RollingExec]]) bit-identical to the Column
   * (higher-order-function) formulation the operators were first
-  * written in, kept verbatim below and applied to the
-  * [[OrderedOps.rollingArray]] window — so oracle parity of the
-  * original formulation carries over to the operator. */
+  * written in, kept verbatim below and applied to a window gathered by
+  * a plain global Spark window — independent of the operator's ring —
+  * so oracle parity of the original formulation carries over to the
+  * operator. */
 class RollingKernelsSpec extends SparkSpec {
 
   /** 600 rows over 7 splits: null values, NaN, negatives, duplicates
@@ -50,7 +52,12 @@ class RollingKernelsSpec extends SparkSpec {
 
   private def assertSameBits(got: DataFrame, hof: org.apache.spark.sql.Column,
                              w: Int, bs: Long, what: String): Unit = {
-    val want = OrderedOps.rollingArray(hostile, "v", w, "__rwin", blockSize = bs)
+    // (row_index, v) structs keep null values in the list; 600 rows
+    // fit one partition
+    val win = Window.orderBy("row_index").rowsBetween(-(w - 1), 0)
+    val want = hostile.withColumn("__rwin", transform(
+        array_sort(collect_list(struct(col("row_index"), col("v"))).over(win)),
+        e => e.getField("v")))
       .select(col("row_index"), hof.as("r"))
     def bits(df: DataFrame): Map[Long, Option[Long]] = df.select("row_index", "r").collect()
       .map(r => r.getLong(0) ->

@@ -14,7 +14,8 @@ import graft.operators.OrderedOps.RollSpec
   * window and block size (plus the fixed layouts window == 1,
   * window == blockSize, an exact-multiple last block and a single
   * block), random double columns with nulls and NaN, decimal(12,2)
-  * and int columns with nulls. Doubles compare bitwise. */
+  * and int columns with nulls, and a string column for the value
+  * hows (shift, rollingArray). Doubles compare bitwise. */
 class RollingPropertySpec extends SparkSpec {
   import RollingPropertySpec.Layout
 
@@ -223,6 +224,65 @@ class RollingPropertySpec extends SparkSpec {
         close(g.get(g.fieldIndex(s"m_$c")), want.map(_._1), s"$ctx mean")
         close(g.get(g.fieldIndex(s"v_$c")), want.map(_._2), s"$ctx var")
         close(g.get(g.fieldIndex(s"s_$c")), want.map(m => math.sqrt(m._2)), s"$ctx std")
+      }
+    }
+  }
+
+  test("shift/diff/rollingArray == naive shifted and windowed values on random layouts") {
+    for ((l, seed) <- layouts) {
+      val in = frame(l.n, seed).withColumn("s", when(col("iv").isNull, lit(null))
+        .otherwise(concat(lit("s"), col("iv").cast("string"))))
+      val cols = Seq("d", "dn", "s")
+      val rows = in.collect().sortBy(_.getLong(0))
+      val xs = cols.map(c => c -> rows.map(r => r.get(r.fieldIndex(c))).toIndexedSeq).toMap
+      def at(c: String, j: Int, fill: Any): Any = if (j < 0 || j >= l.n) fill else xs(c)(j)
+      def fillOf(c: String): Any = if (c == "s") "f" else -1.5
+      def cell(r: Row, c: String): Any = bits(r.get(r.fieldIndex(c)))
+      val bs = l.blockSize.toLong
+      // |periods| up to the block size: the carry is then a whole block
+      for (p <- Seq(l.window, -l.window, l.blockSize, -l.blockSize)) {
+        val ctx = s"$l seed=$seed p=$p"
+        val shifted = byIndex(cols.foldLeft(in) { (df, c) =>
+          OrderedOps.shift(OrderedOps.shift(df, c, p, as = Some(s"p_$c"), blockSize = bs),
+            c, p, as = Some(s"f_$c"), blockSize = bs, fill = Some(fillOf(c)))
+        })
+        assert(shifted.size === l.n, ctx)
+        for (c <- cols; i <- 0 until l.n) {
+          val r = shifted(i.toLong)
+          assert(cell(r, s"p_$c") === bits(at(c, i - p, null)), s"$ctx $c row $i")
+          assert(cell(r, s"f_$c") === bits(at(c, i - p, fillOf(c))), s"$ctx $c fill row $i")
+        }
+        val trimmedDf = OrderedOps.shift(in, "dn", p, as = Some("t"), blockSize = bs, trim = true)
+        assert(trimmedDf.columns.toSeq === in.columns.toSeq :+ "t", ctx)
+        val trimmed = byIndex(trimmedDf)
+        val kept = (0 until l.n).filter(i => i - p >= 0 && i - p < l.n)
+        assert(trimmed.keySet === kept.map(_.toLong).toSet, s"$ctx trim")
+        kept.foreach(i => assert(cell(trimmed(i.toLong), "t") === bits(at("dn", i - p, null)),
+          s"$ctx trim row $i"))
+        val diffed = byIndex(OrderedOps.diff(OrderedOps.diff(in, "d", p, blockSize = bs),
+          "dn", p, blockSize = bs))
+        for (c <- Seq("d", "dn"); i <- 0 until l.n) {
+          val want = (at(c, i, null), at(c, i - p, null)) match {
+            case (a: Double, b: Double) => a - b
+            case _ => null
+          }
+          assert(cell(diffed(i.toLong), c) === bits(want), s"$ctx diff $c row $i")
+        }
+      }
+      for (edge <- Seq("right", "left")) {
+        val ctx = s"$l seed=$seed edge=$edge"
+        val fills = Map("d" -> None, "dn" -> Some(-1.5), "s" -> Some("f"))
+        val arrays = byIndex(cols.foldLeft(in) { (df, c) =>
+          OrderedOps.rollingArray(df, c, l.window, s"a_$c", blockSize = bs,
+            fillValue = fills(c), edge = edge)
+        })
+        assert(arrays.size === l.n, ctx)
+        for (c <- cols; i <- 0 until l.n) {
+          val r = arrays(i.toLong)
+          val span = if (edge == "right") (i - l.window + 1) to i else i until i + l.window
+          assert(r.getSeq[Any](r.fieldIndex(s"a_$c")).map(bits) ===
+            span.map(j => bits(at(c, j, fills(c).orNull))), s"$ctx $c row $i")
+        }
       }
     }
   }
